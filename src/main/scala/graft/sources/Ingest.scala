@@ -2,13 +2,15 @@ package graft.sources
 
 import graft.pipeline.PipelineExecutor
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graftshim.DriverCsvSchema
 import org.apache.spark.sql.types._
 
 /**
  * Data ingestion, mirroring the reference's sources (SURVEY §2.3):
  *
  *  - CSV with inferred schema — the `read_csv_auto(f, header=true,
- *    auto_detect=true)` path (reference: ui/src/App.tsx:370-374,392-395);
+ *    auto_detect=true)` path (reference: ui/src/App.tsx:370-374,392-395),
+ *    typed on the driver for small single files (see [[csv]]);
  *  - all-VARCHAR fallback capped at 10,000 data rows — the manual-parse
  *    tier (ui/src/App.tsx:417-420);
  *  - image-payload tables `{name, columns:[{name,type}], rows:[[...]]}`
@@ -23,25 +25,37 @@ object Ingest {
     * DuckDB's read_csv_auto and the reference's quote-aware manual parser
     * (ui/src/App.tsx:328-352) both speak; Spark's default backslash
     * escape silently splits such fields at embedded commas (caught by the
-    * q_load_csv_quoted parity gate). */
+    * q_load_csv_quoted parity gate).
+    *
+    * A small upload is typed on the driver, like read_csv_auto sniffing
+    * in-process: when the path is one uncompressed UTF-8 file no larger
+    * than `spark.sql.files.openCostInBytes` (4 MB by default — Spark's own
+    * estimate of the bytes that cost as much as opening a file, so below it
+    * a job costs more than the read), [[DriverCsvSchema]] folds Spark's
+    * `CSVInferSchema` over every line in the calling thread and the file is
+    * read with that schema. The types are exactly Spark's, over the whole
+    * file, not a sample's; the read starts no job until an action runs,
+    * where Spark's inference starts two (header `take(1)` + inference
+    * aggregate). Directories, globs, compressed files, other charsets,
+    * larger files and files without a header line (Spark reads those with an
+    * empty schema) keep Spark's `inferSchema` path. */
   def csv(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .option("escape", "\"")
-      .option("mode", "PERMISSIVE")
-      .csv(path)
+    read(spark, path, CsvOptions + ("inferSchema" -> "true"))
 
   /** Fallback CSV path: every column VARCHAR, first 10k data rows
-    * (ui/src/App.tsx:417-420). */
+    * (ui/src/App.tsx:417-420). The all-VARCHAR schema comes from the header
+    * line read on the driver — one line, so any size of single file — which
+    * saves the header `take(1)` job Spark runs even without inference. */
   def csvFallback(spark: SparkSession, path: String, maxRows: Int = 10000): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("inferSchema", "false")
-      .option("escape", "\"")
-      .option("mode", "PERMISSIVE")
-      .csv(path)
-      .limit(maxRows)
+    read(spark, path, CsvOptions + ("inferSchema" -> "false")).limit(maxRows)
+
+  private[sources] val CsvOptions =
+    Map("header" -> "true", "escape" -> "\"", "mode" -> "PERMISSIVE")
+
+  private def read(spark: SparkSession, path: String, options: Map[String, String]): DataFrame = {
+    val reader = spark.read.options(options)
+    DriverCsvSchema.infer(spark, path, options).fold(reader)(s => reader.schema(s)).csv(path)
+  }
 
   /** Load + register a CSV under the reference's `table_<stem>` name. */
   def loadCsvTable(spark: SparkSession, path: String): (String, DataFrame) = {

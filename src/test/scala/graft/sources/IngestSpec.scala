@@ -1,7 +1,13 @@
 package graft.sources
 
 import graft.SparkTestBase
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.DriverCsvSchema
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
+import scala.util.Try
 
 class IngestSpec extends SparkTestBase {
 
@@ -9,6 +15,29 @@ class IngestSpec extends SparkTestBase {
     val f = Files.createTempFile("graft_ingest", ".csv")
     Files.writeString(f, content)
     f.toString
+  }
+
+  private def fixture(name: String): String =
+    Paths.get(getClass.getResource(s"/fixtures/$name").toURI).toString
+
+  /** The read `Ingest` issues, typed by Spark's own inference (its header
+    * and inference jobs included). */
+  private def sparkRead(s: SparkSession, path: String, infer: Boolean): DataFrame =
+    s.read.options(Ingest.CsvOptions + ("inferSchema" -> infer.toString)).csv(path)
+
+  private def sparkSchema(s: SparkSession, path: String, infer: Boolean) =
+    sparkRead(s, path, infer).schema
+
+  /** The driver fold is taken, and both CSV tiers read with exactly the
+    * schema, and the scan plan, Spark infers itself. */
+  private def assertDriverParity(path: String, s: SparkSession = spark): Unit = {
+    val expected = sparkRead(s, path, infer = true)
+    assert(DriverCsvSchema.infer(s, path, Ingest.CsvOptions + ("inferSchema" -> "true"))
+      .contains(expected.schema))
+    val typed = Ingest.csv(s, path)
+    assert(typed.schema == expected.schema)
+    assert(typed.queryExecution.executedPlan.sameResult(expected.queryExecution.executedPlan))
+    assert(Ingest.csvFallback(s, path).schema == sparkSchema(s, path, infer = false))
   }
 
   test("parquetMerged: schema union across shards, NULLs for missing columns") {
@@ -87,7 +116,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("CSV fixture: Spark inference parity with read_csv_auto (values; widths normalized)") {
-    val f = "/root/repo/src/test/resources/fixtures/parts_fixture.csv"
+    val f = fixture("parts_fixture.csv")
     val df = Ingest.csv(spark, f)
     // Pin Spark's inferred types: ints narrow (vs DuckDB's BIGINT — width
     // normalized at the oracle gate per SURVEY §7.3), doubles and strings
@@ -100,8 +129,93 @@ class IngestSpec extends SparkTestBase {
     assert(r.getInt(0) == 0 && r.getString(1) == "cold widget" && r.getDouble(3) == 900.0)
   }
 
+  test("driver-side CSV schema equals Spark's on the fixtures") {
+    assertDriverParity(fixture("parts_fixture.csv"))
+    assertDriverParity(fixture("quoted_fixture.csv"))
+  }
+
+  test("driver-side CSV schema equals Spark's on generated edge cases") {
+    val cases = Seq(
+      "blank lines" -> "a,b\n\n1,x\n   \n2,y\n\n",
+      "header repeated mid-file" -> "a,b\n1,2\na,b\n3,4\n",
+      "int column ending in text" -> "n,m\n1,1\n2,2\nthree,3\n",
+      "decimal/double/date/timestamp/boolean" ->
+        ("big,dbl,day,ts,flag\n" +
+          "123456789012345678901234,1.5,2024-01-02,2024-01-02T03:04:05,true\n" +
+          "1,2e10,2024-02-29,2024-03-01T00:00:00.123,false\n"),
+      "all-empty column" -> "a,b,c\n1,,x\n2,,y\n",
+      "header only" -> "a,b,c\n",
+      "CRLF line ends" -> "a,b\r\n1,2.5\r\n3,4\r\n",
+      "byte-order mark" -> "\uFEFFa,b\n1,2\n",
+      "short and long rows" -> "a,b,c\n1\n2,3,4,5\n")
+    cases.foreach { case (label, content) =>
+      withClue(s"$label: ")(assertDriverParity(writeCsv(content)))
+    }
+  }
+
+  test("duplicate and empty header names match Spark under both case modes") {
+    val p = writeCsv("a,A,,a,b\n1,2,3,4,5\n")
+    Seq("true", "false").foreach { cs =>
+      val s = spark.newSession()
+      s.conf.set("spark.sql.caseSensitive", cs)
+      withClue(s"caseSensitive=$cs: ")(assertDriverParity(p, s))
+    }
+  }
+
+  test("empty and blank-only CSVs are left to Spark and read as Spark reads them") {
+    def outcome(read: => DataFrame) =
+      Try { val d = read; (d.schema, d.collect().toSeq) }.toEither.left.map(_.getMessage)
+    Seq("", "\n  \n\n").foreach { content =>
+      val p = writeCsv(content)
+      Seq(true, false).foreach { infer =>
+        val options = Ingest.CsvOptions + ("inferSchema" -> infer.toString)
+        assert(DriverCsvSchema.infer(spark, p, options).isEmpty)
+        val expected = outcome(sparkRead(spark, p, infer))
+        assert(outcome(if (infer) Ingest.csv(spark, p) else Ingest.csvFallback(spark, p)) == expected)
+      }
+    }
+  }
+
+  test("a file above openCostInBytes keeps Spark's inference with the same schema") {
+    val p = fixture("parts_fixture.csv")
+    val s = spark.newSession()
+    s.conf.set("spark.sql.files.openCostInBytes", "64")
+    assert(DriverCsvSchema.infer(s, p, Ingest.CsvOptions + ("inferSchema" -> "true")).isEmpty)
+    assert(Ingest.csv(s, p).schema == sparkSchema(s, p, infer = true))
+    // the header-only tier reads one line, so size does not gate it
+    assert(DriverCsvSchema.infer(s, p, Ingest.CsvOptions + ("inferSchema" -> "false")).isDefined)
+  }
+
+  test("small-file CSV reads start no Spark job until an action runs") {
+    val p = writeCsv("id,name\n1,a\n2,b\n")
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    // Listener events arrive in order, so once the marker job is seen every
+    // job the probe group started before it has been counted.
+    def probeJobs(body: => Unit): Int = {
+      groups.clear()
+      sc.setJobGroup("ingest-probe", "ingest")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("ingest-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      eventually(timeout(30.seconds))(assert(groups.contains("ingest-marker")))
+      groups.toArray.count(_ == "ingest-probe")
+    }
+    sc.addSparkListener(listener)
+    try {
+      var typed, fallback: DataFrame = null
+      assert(probeJobs { typed = Ingest.csv(spark, p); fallback = Ingest.csvFallback(spark, p) } == 0)
+      assert(probeJobs(typed.collect()) > 0)
+      assert(probeJobs(fallback.collect()) > 0)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("JSONL fixture: inference, sparse fields, nested struct/array, escaped newlines") {
-    val f = "/root/repo/src/test/resources/fixtures/docs_fixture.jsonl"
+    val f = fixture("docs_fixture.jsonl")
     val df = Ingest.jsonl(spark, f)
     // inference parity surface with read_json_auto: BIGINT/DOUBLE/BOOLEAN/
     // VARCHAR/struct/array agree; dates stay strings on the Spark side
@@ -124,7 +238,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("loadJsonlTable registers under the table_<stem> naming rule") {
-    val f = "/root/repo/src/test/resources/fixtures/docs_fixture.jsonl"
+    val f = fixture("docs_fixture.jsonl")
     val (name, _) = Ingest.loadJsonlTable(spark, f)
     assert(name == "table_docs_fixture")
     assert(spark.sql(s"SELECT count(*) FROM $name").head().getLong(0) == 25L)

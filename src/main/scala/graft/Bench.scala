@@ -3,6 +3,9 @@ package graft
 /**
  * Benchmark main — runs every SparkEntry query against
  * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query seconds.
+ * `graft.Bench q_a q_b` times only the named queries (the A/B loop for
+ * one change) and skips the board-coverage check; an unknown name is
+ * rejected before any Spark session starts.
  *
  * Each query is forced through the `noop` sink, not `count()`: count lets
  * Catalyst prune every projected column (a filter query would measure only
@@ -20,11 +23,14 @@ object Bench {
   private final case class Run(sec: Double, ok: Boolean)
 
   def main(args: Array[String]): Unit = {
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown quer(ies): ${unknown.mkString(", ")}")
+    val names =
+      if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted
+      else args.toSeq.distinct
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(
-      master = s"local[$cpus]", shufflePartitions = cpus.toInt,
-      appName = "graft-bench")
+    val spark = GraftSession.builder(appName = "graft-bench")
 
     def runOnce(name: String): Run = {
       // Quiesce: collect the previous query's garbage NOW instead of letting
@@ -63,7 +69,7 @@ object Bench {
     // steady-state cost. SPARK_GRAFT_BENCH_REPS=1 opts into one pass for
     // long boards (the sf1 full-board run) where wall-clock dominates.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    val results = SparkEntry.queries.keys.toSeq.sorted.map { n =>
+    val results = names.map { n =>
       val runs = (1 to math.max(1, reps)).map(_ => runOnce(n))
       n -> Run(runs.map(_.sec).min, runs.forall(_.ok))
     }
@@ -75,8 +81,9 @@ object Bench {
     // against the on-disk manifest — not this JVM's own keySet, which is
     // stale exactly when the tree is — is what actually catches a
     // stale-compiled-tree board run against a fresh checkout.
+    // A named subset is not a board, so it has nothing to cover.
     val manifest = new java.io.File("tools/expected_queries.txt")
-    if (manifest.isFile) {
+    if (args.isEmpty && manifest.isFile) {
       val src = scala.io.Source.fromFile(manifest, "UTF-8")
       val expected =
         try src.getLines().map(_.trim).filter(_.nonEmpty).toSet
@@ -85,7 +92,7 @@ object Bench {
       require(missing.isEmpty,
         s"bench board is missing ${missing.size} manifest quer(ies) — " +
           "stale compiled tree? " + missing.toSeq.sorted.mkString(", "))
-    } else System.err.println(
+    } else if (args.isEmpty) System.err.println(
       "[bench] tools/expected_queries.txt not found (non-repo CWD?) — " +
         "board-coverage check skipped")
     val qs = results.map { case (k, r) =>

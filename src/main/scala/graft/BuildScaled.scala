@@ -17,10 +17,7 @@ object BuildScaled {
     val srcDir = args(0)
     val outDir = args(1)
     val rep = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = GraftSession.builder(
-      master = s"local[$cpus]", shufflePartitions = cpus.toInt,
-      appName = "graft-build-scaled")
+    val spark = GraftSession.builder(appName = "graft-build-scaled")
     ScaleProbe.buildScaled(spark, srcDir, outDir, rep)
     Seq("region", "nation").foreach { t =>
       if (!new java.io.File(s"$outDir/$t.parquet").exists()) {

@@ -62,10 +62,7 @@ object Decade2 {
     require(args.length >= 3, "usage: Decade2 <sf0.1> <sf1> <sf10> [reps]")
     val dirs = args.take(3)
     val reps = if (args.length > 3) args(3).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(
-      master = s"local[$cpus]", shufflePartitions = cpus.toInt,
-      appName = "graft-decade2")
+    val spark = GraftSession.builder(appName = "graft-decade2")
 
     def time(f: () => DataFrame): Double = {
       System.gc()

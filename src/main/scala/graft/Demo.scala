@@ -19,8 +19,7 @@ object Demo {
                       event_type: String, value: Double)
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder(master = "local[4]", shufflePartitions = 4,
-      appName = "graft-demo")
+    val spark = GraftSession.builder(appName = "graft-demo")
     import spark.implicits._
 
     // 1. NL prompt → plan (SQL + stages + chart) → execute → chart suggestion

@@ -64,9 +64,7 @@ object FlowReplay {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val scaledDir = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val rep = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(master = s"local[$cpus]",
-      shufflePartitions = cpus.toInt, appName = "graft-flow-replay")
+    val spark = GraftSession.builder(appName = "graft-flow-replay")
 
     ScaleProbe.buildScaled(spark, srcDir, scaledDir, rep)
     val ex = new PipelineExecutor(spark)

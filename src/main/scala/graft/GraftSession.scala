@@ -12,7 +12,8 @@ import org.apache.spark.sql.graftshim.CatalystBridge
  * defaults (AQE, skew handling, sized shuffle partitions).
  *
  * Usable two ways:
- *  - `GraftSession.builder(...)` for a local session (tests, Bench, Verify);
+ *  - `GraftSession.builder(appName = ...)` for a local session sized to
+ *    the machine (`SPARK_GRAFT_CPUS` overrides the core count);
  *  - `--conf spark.sql.extensions=graft.GraftExtensions` on a real cluster.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -105,41 +106,35 @@ object GraftSession {
   def simhash64(c: Column): Column =
     CatalystBridge.column(SimHash64(CatalystBridge.expression(c)))
 
+  /** Cores a local session runs on: `SPARK_GRAFT_CPUS` when the
+    * deployment sets it, else every core the JVM sees. The one place a
+    * core count is decided; [[builder]] sizes `master` and the shuffle
+    * partitions from it. */
+  private def cores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** A local session sized to [[cores]] (pass `master` and
+    * `shufflePartitions` to size it otherwise), with graft's native
+    * expressions registered and the scale-oriented defaults applied. */
   def builder(
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-      shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      master: String = s"local[$cores]",
+      shufflePartitions: Int = cores,
       appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
       .withExtensions(new GraftExtensions)
       // Sized for local[N]; on a 1000-executor cluster AQE coalescing makes
-      // the initial number a ceiling, not a fixed cost.
+      // the initial number a ceiling, not a fixed cost. The AQE coalescing
+      // floor stays at Spark's 1 MB default: a 64 KB floor parallelized
+      // byte-small compute-heavy reduce stages (q_basket_rules' 1.9 MB
+      // pair-explosion stage) but measured a NET loss — the extra tiny
+      // tasks taxed the many window/agg queries more than the few
+      // CPU-bound stages gained (OPTIMIZATION_r10.md).
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // AQE coalescing floor and the small-scan spread cap stay
-      // env-overridable for A/B runs. The floor KEEPS Spark's 1 MB
-      // default: a 64 KB floor was tried this round (it parallelizes
-      // byte-small compute-heavy reduce stages, e.g. q_basket_rules'
-      // 1.9 MB pair-explosion stage) but measured a NET loss — the
-      // extra tiny tasks taxed the many window/agg queries more than
-      // the few CPU-bound stages gained (OPTIMIZATION_r10.md, A/B/C/D
-      // subset experiments).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"))
-      .config("spark.graft.scan.spreadMaxBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SPREAD_MAX",
-          (64L * 1024 * 1024).toString))
-      // spread width: a width-only A/B at fixed 32 cores (r11) read
-      // linkage_score 1.85/2.73/3.16 s at widths 32/16/8 — the linkage
-      // probe wants the full machine — while the embed gates' 16-width
-      // edge (3.14 vs 4.08 on pca) sat inside the ambient noise band,
-      // so the default stays defaultParallelism; the knob remains for
-      // cluster tuning
-      .config("spark.graft.scan.spreadWidth",
-        sys.env.getOrElse("SPARK_GRAFT_SPREAD_WIDTH",
-          shufflePartitions.toString))
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // Codegen class cache (static conf, default 100 entries): one
       // iterative query (pageRank = ~25 stages and their broadcast
@@ -151,8 +146,7 @@ object GraftSession {
       // (~tens of KB per entry); at cluster scale compile time is noise
       // against data time, but the cache hit keeps repeated interactive
       // plans cheap there too.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       // Cached-table columnar compression OFF: the IMR build otherwise
       // runs a per-value compression-scheme stats pass (RLE candidate
       // scan = boxed equality per cell — jstack'd 12 task threads in
@@ -160,10 +154,8 @@ object GraftSession {
       // graph setup; ~14 s summed task CPU per cached |E| string frame
       // at sf0.1). The operators' caches are short-lived per-query
       // frames, re-read a handful of times and freed — CPU, not memory,
-      // is their binding constraint. Memory-tight cluster deployments
-      // can flip it back via env.
-      .config("spark.sql.inMemoryColumnarStorage.compressed",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_COMPRESSED", "false"))
+      // is their binding constraint.
+      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
       // Split even small files across all cores: a single-file scan
       // otherwise pins compute-heavy per-row expressions (shingling,
       // hashing) to ONE task regardless of cluster size.

@@ -19,8 +19,10 @@ import scala.collection.mutable
  *
  * then dumps `.explain("formatted")` to `<SPARK_GRAFT_PLAN_DIR, default
  * plans/r11>/<query>_<tag>.txt` (tag from SPARK_GRAFT_PLAN_TAG, default
- * "before"). Diagnostic only —
- * never part of the bench/oracle surface.
+ * "before"). `SPARK_GRAFT_PLAN_ONLY=1` dumps the plans without executing
+ * anything. The one per-query profiler; for plain per-query seconds run
+ * `graft.Bench <query> ...`. Diagnostic only — never part of the
+ * bench/oracle surface.
  */
 object ProfileQ {
   private final class StageCollector extends SparkListener {
@@ -80,11 +82,8 @@ object ProfileQ {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileQ <query> [<query> ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
-    val spark = GraftSession.builder(
-      master = s"local[$cpus]", shufflePartitions = cpus.toInt,
-      appName = "graft-profile")
+    val spark = GraftSession.builder(appName = "graft-profile")
     // plan-only mode: dump formatted plans without executing (cheap
     // "before" evidence capture for queries about to be changed)
     if (sys.env.get("SPARK_GRAFT_PLAN_ONLY").contains("1")) {

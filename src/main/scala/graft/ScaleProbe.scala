@@ -388,10 +388,7 @@ object ScaleProbe {
     // optional trailing query names: probe only that subset (incremental
     // refreshes after adding a family, instead of the full sweep)
     val subset = args.drop(3).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(
-      master = s"local[$cpus]", shufflePartitions = cpus.toInt,
-      appName = "graft-scale-probe")
+    val spark = GraftSession.builder(appName = "graft-scale-probe")
 
     buildScaled(spark, srcDir, scaledDir, rep)
 

@@ -55,32 +55,23 @@ object SparkEntry {
     * on ONE task (measured: q_dedup_substring spent 1.78 s of 3.38 s
     * in a single-task window-digest scan; q_embed_covariance ran its
     * whole 10M-cell explode serially). Guide §2.5: an unsplittable
-    * input is repartitioned immediately after the read. Engages only
-    * while the relation's stats size is at or below
-    * `spark.graft.scan.spreadMaxBytes` (default 64 MB; 0 disables): a
-    * production-scale input has many row groups, splits naturally,
-    * and must never pay a corpus shuffle here — the spread shuffle is
-    * by construction bounded by that threshold. Applied PER GATE, only
-    * where a single-task scan stage measurably dominates (the
-    * covariance/PCA d²-explode, the substring window-digest pass) —
-    * a blanket spread of the docs/embeddings helpers was tried and
-    * measurably TAXED the many light consumers (the exchange costs
-    * more than the 1-task scan it parallelizes; A/B/C/D experiments in
-    * OPTIMIZATION_r10.md). */
-  private def spread(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val maxBytes = spark.conf.getOption("spark.graft.scan.spreadMaxBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-    // width is its own knob (spark.graft.scan.spreadWidth, default
-    // defaultParallelism): r10's 8-core driver run beat 32 cores on the
-    // spread gates, and a width-only A/B at fixed 32 cores confirmed
-    // defaultParallelism over-shards this SF's single-row-group scans
-    val width = spark.conf.getOption("spark.graft.scan.spreadWidth")
-      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBytes)
-      df.repartition(width)
+    * input is repartitioned immediately after the read, to
+    * `defaultParallelism` tasks: a width-only A/B at fixed 32 cores
+    * read linkage_score 1.85/2.73/3.16 s at widths 32/16/8 — the
+    * linkage probe wants the full machine. Engages only while the
+    * relation's stats size is at most 64 MB: a production-scale input
+    * has many row groups, splits naturally, and must never pay a
+    * corpus shuffle here — the spread shuffle is by construction
+    * bounded by that threshold. Applied PER GATE, only where a
+    * single-task scan stage measurably dominates (the covariance/PCA
+    * d²-explode, the substring window-digest pass) — a blanket spread
+    * of the docs/embeddings helpers was tried and measurably TAXED the
+    * many light consumers (the exchange costs more than the 1-task scan
+    * it parallelizes; A/B/C/D experiments in OPTIMIZATION_r10.md). */
+  private def spread(df: DataFrame): DataFrame =
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= (64L << 20))
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     else df
-  }
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")

@@ -60,11 +60,8 @@ object SubplanDump {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: SubplanDump <name> [<name> ...] | all")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
-    val spark = GraftSession.builder(
-      master = s"local[$cpus]", shufflePartitions = cpus.toInt,
-      appName = "graft-subplan")
+    val spark = GraftSession.builder(appName = "graft-subplan")
     val reg = subplans(spark, sfDir)
     val names = if (args.sameElements(Array("all"))) reg.keys.toSeq.sorted
                 else args.toSeq

@@ -12,10 +12,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // Optional subset for the local iterate loop; the driver passes none.
     val subset = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(
-      master = s"local[$cpus]", shufflePartitions = cpus.toInt,
-      appName = "graft-verify")
+    val spark = GraftSession.builder(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => subset.isEmpty || subset(name) }

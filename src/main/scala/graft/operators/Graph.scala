@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
  * CALLER-OWNED lifetime. A session running many heavy queries
  * back-to-back should free each consumed result with
  * [[graft.plans.Checkpoints.release]] (after which the frame is dead)
- * — Bench/QueryTime/Verify do; see Checkpoints' scaladoc for the sf1
+ * — Bench/ProfileQ/Verify do; see Checkpoints' scaladoc for the sf1
  * measurement that motivated the contract.
  *
  * Determinism across engines (the repo's float policy): per-edge

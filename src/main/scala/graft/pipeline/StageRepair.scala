@@ -38,9 +38,10 @@ object StageRepair {
     * or None when the table is unknown. */
   type SchemaLookup = String => Option[Seq[String]]
 
-  def repairAll(raw: Seq[RawStage], schemaOf: SchemaLookup,
-                inputTableFor: RawStage => Option[String]): Seq[Stage] =
-    raw.flatMap(r => repair(r, schemaOf, inputTableFor(r)))
+  /** Repair a planner's stages; each stage validates its columns against
+    * its own `data.table`. */
+  def repairAll(raw: Seq[RawStage], schemaOf: SchemaLookup): Seq[Stage] =
+    raw.flatMap(r => repair(r, schemaOf, None))
 
   def repair(raw: RawStage, schemaOf: SchemaLookup,
              inputTable: Option[String]): Option[Stage] = {
@@ -76,8 +77,10 @@ object StageRepair {
           val aggs0 = rawAggregations(raw)
           val aggs = if (aggs0.nonEmpty) aggs0
                      else Seq(Aggregation("COUNT", "*", Some("count")))
-          val validated = validateGroupColumns(groupBy, schemaOf, inputTable)
-          Some(GroupStage(raw.id, raw.description, str("table"), validated, aggs))
+          val table = str("table")
+          val validated =
+            validateGroupColumns(groupBy, schemaOf, inputTable.orElse(table))
+          Some(GroupStage(raw.id, raw.description, table, validated, aggs))
         }
 
       case "UNION" =>

@@ -76,7 +76,7 @@ object TransformResponse {
              schemaOf: graft.pipeline.StageRepair.SchemaLookup): Plan =
     Plan(
       sql = r.sql.getOrElse(""),
-      stages = graft.pipeline.StageRepair.repairAll(r.rawStages, schemaOf, _ => None),
+      stages = graft.pipeline.StageRepair.repairAll(r.rawStages, schemaOf),
       chartConfig = r.chartConfig,
       explanation = r.explanation,
       isValid = r.isValid)

@@ -25,7 +25,7 @@ import org.apache.spark.sql.DataFrame
  * derived from it that was not itself materialized) throws. Call it
  * when — and only when — the result has been fully consumed (written,
  * collected, or folded into something materialized). Bench and
- * QueryTime release every query's result between timed runs for
+ * ProfileQ release every query's result between timed runs for
  * exactly this reason.
  */
 object Checkpoints {

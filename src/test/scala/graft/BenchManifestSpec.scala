@@ -29,4 +29,13 @@ class BenchManifestSpec extends AnyFunSuite {
         s"add: ${missing.toSeq.sorted.mkString(",")} " +
         s"remove: ${stale.toSeq.sorted.mkString(",")}")
   }
+
+  test("Bench rejects an unknown query name before building a session") {
+    val before = org.apache.spark.sql.SparkSession.getDefaultSession
+    val e = intercept[IllegalArgumentException](
+      Bench.main(Array("q_pipeline", "q_no_such_query")))
+    assert(e.getMessage.contains("q_no_such_query"))
+    assert(!e.getMessage.contains("q_pipeline"))
+    assert(org.apache.spark.sql.SparkSession.getDefaultSession == before)
+  }
 }

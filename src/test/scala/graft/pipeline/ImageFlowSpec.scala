@@ -92,7 +92,7 @@ class ImageFlowSpec extends SparkTestBase {
         "leftKey" -> "customer_id", "rightKey" -> "customer_id")))
     val schemaOf: StageRepair.SchemaLookup = n =>
       scala.util.Try(ex.table(n)).toOption.map(_.schema.fieldNames.toSeq)
-    val repaired = StageRepair.repairAll(raw, schemaOf, _ => None)
+    val repaired = StageRepair.repairAll(raw, schemaOf)
     assert(repaired.size == 1)
 
     // image path = continue-on-error execution (ui/src/App.tsx:1491-1498)
@@ -119,7 +119,7 @@ class ImageFlowSpec extends SparkTestBase {
       Map("joinType" -> "INNER",
         "leftTable" -> "result_stage_2_filter", "rightTable" -> "products")))
     val repaired = StageRepair.repairAll(raw,
-      n => scala.util.Try(ex.table(n)).toOption.map(_.schema.fieldNames.toSeq), _ => None)
+      n => scala.util.Try(ex.table(n)).toOption.map(_.schema.fieldNames.toSeq))
     assert(repaired == Seq(JoinStage(
       "stage_join_continuation_1",
       "Join products with latest result on customer_id", "INNER",

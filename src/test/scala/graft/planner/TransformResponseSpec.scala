@@ -87,7 +87,7 @@ class TransformResponseSpec extends SparkTestBase {
     val parsed = TransformResponse.parse(goldenJson)
     val schemaOf: StageRepair.SchemaLookup = n =>
       scala.util.Try(ex.table(n)).toOption.map(_.schema.fieldNames.toSeq)
-    val stages = StageRepair.repairAll(parsed.rawStages, schemaOf, _ => None)
+    val stages = StageRepair.repairAll(parsed.rawStages, schemaOf)
     assert(stages.map(_.getClass.getSimpleName) ==
       Seq("JoinStage", "FilterStage", "GroupStage", "SortStage"))
     assert(stages.collectFirst { case j: JoinStage => (j.leftKey, j.rightKey) }
@@ -115,6 +115,18 @@ class TransformResponseSpec extends SparkTestBase {
     assert(plan.isValid && plan.stages.size == 4)
     assert(plan.chartConfig.exists(_.chartType == "bar"))
     assert(plan.sql.nonEmpty && plan.explanation.nonEmpty)
+  }
+
+  test("toPlan fuzzy-matches a GROUP stage's groupBy against its own table") {
+    // the groupBy repair (ui/src/App.tsx:1394-1446) on the planner path
+    val plan = TransformResponse.toPlan(TransformResponse.parse(
+      """{"explanation": "e",
+         "transformationStages": [{"type": "GROUP", "description": "per customer",
+           "data": {"table": "orders", "groupBy": ["CustomerID"]}}]}"""),
+      { case "orders" => Some(Seq("order_id", "customer_id", "amount"))
+        case _ => None })
+    assert(plan.stages.collect { case g: GroupStage => (g.table, g.groupBy) } ==
+      Seq((Some("orders"), Seq("customer_id"))))
   }
 
   test("invalid response is stripped to {isValid, explanation}, like the client") {

@@ -27,7 +27,7 @@ if not probe:
 # for wall-clock). min-of-2 vs 1-rep biases observed ratios UPWARD by
 # roughly the run-to-run noise (~10-20% on sub-second queries), so a
 # marginal flag near the 1.5x slack should be re-measured warm (two
-# sf1 reps of just that query via QueryTime) before adjudication.
+# sf1 reps of just that query via `graft.Bench <query>`) before adjudication.
 flagged, checked = [], 0
 for q, pr in sorted(probe.items()):
     if q not in sf1 or q not in a:

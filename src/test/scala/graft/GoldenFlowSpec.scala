@@ -10,17 +10,18 @@ import graft.sources.Ingest
  * 10 rows × 9 columns with the key column deduped
  * (reference: ui/src/sampleStages.json, ui/src/App.tsx:201-259).
  *
- * Reads fixtures directly from the read-only reference checkout; skipped
- * if absent so the suite is portable.
+ * The stages come from the vendored test resource
+ * `fixtures/sampleStages.json` (FIXTURES.md §1.3); the two CSVs are read
+ * directly from the read-only reference checkout, and the test is skipped
+ * where they are absent so the suite is portable.
  */
 class GoldenFlowSpec extends SparkTestBase {
 
   private val sampleDir = "/root/reference/ui/public/sampleData"
-  private val stagesPath = "/root/reference/ui/src/sampleStages.json"
 
   private def available: Boolean =
-    new java.io.File(stagesPath).isFile &&
-      new java.io.File(s"$sampleDir/customers.csv").isFile
+    Seq("customers.csv", "orders.csv")
+      .forall(f => new java.io.File(s"$sampleDir/$f").isFile)
 
   test("sampleStages.json golden join: 10 rows x 9 cols, key deduped") {
     assume(available, "reference checkout not present")
@@ -33,8 +34,8 @@ class GoldenFlowSpec extends SparkTestBase {
     // by the cleaned-name fallback (ui/src/App.tsx:1225-1268); register both.
     ex.register("customers", cust).register("orders", ord)
 
-    val stages = StageJson.parseStages(
-      java.nio.file.Files.readString(java.nio.file.Path.of(stagesPath)))
+    val stages = StageJson.parseStages(java.nio.file.Files.readString(
+      java.nio.file.Path.of(getClass.getResource("/fixtures/sampleStages.json").toURI)))
     val out = ex.run(stages)
 
     assert(out.count() == 10)

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.model._
+import java.nio.file.{Files, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -9,16 +10,27 @@ import org.scalatest.funsuite.AnyFunSuite
  * fixtures: the shipped sampleStages.json and a multi-stage flow shaped
  * like the image-analysis examples (two LOADs feeding a JOIN, a FILTER
  * on the join output, an implicit chain, and the documented quirks).
+ *
+ * sampleStages.json is vendored as the test resource
+ * `fixtures/sampleStages.json`, copied from FIXTURES.md §1.3, which
+ * documents ref:ui/src/sampleStages.json:1-14.
  */
 class StageGraphSpec extends AnyFunSuite {
 
   private def cond = Seq(FilterCondition("a", "=", "1"))
   private def agg = Seq(Aggregation("COUNT", "*", Some("n")))
 
+  private def read(path: Path): Seq[Stage] =
+    StageJson.parseStages(Files.readString(path))
+
   test("sampleStages.json: a lone JOIN with no LOADs has no inputs and no edges") {
-    val stages = StageJson.parseStages(java.nio.file.Files.readString(
-      java.nio.file.Path.of("/root/reference/ui/src/sampleStages.json")))
-    assume(stages.nonEmpty)
+    val stages = read(
+      Path.of(getClass.getResource("/fixtures/sampleStages.json").toURI))
+    assert(stages.nonEmpty)
+    // where the reference checkout is present, the vendored copy must
+    // still parse to the same stages as the original
+    val original = Path.of("/root/reference/ui/src/sampleStages.json")
+    if (Files.isRegularFile(original)) assert(read(original) == stages)
     val nodes = StageGraph.buildStageGraph(stages)
     // no LOAD registered either table name -> the truthiness guard
     // drops both inputs, exactly like the reference

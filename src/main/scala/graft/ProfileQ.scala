@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 import scala.collection.mutable
@@ -17,9 +18,8 @@ import scala.collection.mutable
  *  - the executed plan's per-operator SQLMetrics (rows, dataSize, op
  *    times) walked from the AQE final plan,
  *
- * then dumps `.explain("formatted")` to `<SPARK_GRAFT_PLAN_DIR, default
- * plans/r11>/<query>_<tag>.txt` (tag from SPARK_GRAFT_PLAN_TAG, default
- * "before"). `SPARK_GRAFT_PLAN_ONLY=1` dumps the plans without executing
+ * then dumps `.explain("formatted")` with [[writePlan]].
+ * `SPARK_GRAFT_PLAN_ONLY=1` dumps the plans without executing
  * anything. The one per-query profiler; for plain per-query seconds run
  * `graft.Bench <query> ...`. Diagnostic only — never part of the
  * bench/oracle surface.
@@ -60,6 +60,18 @@ object ProfileQ {
     }
   }
 
+  /** Writes `df`'s formatted plan to `<SPARK_GRAFT_PLAN_DIR, default
+    * plans/r11>/<name>_<tag>.txt` (tag from SPARK_GRAFT_PLAN_TAG, default
+    * "before"). The one plan-file writer: ProfileQ and [[SubplanDump]]. */
+  private[graft] def writePlan(name: String, df: DataFrame): Unit = {
+    val dir = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r11"))
+    dir.mkdirs()
+    val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
+    val w = new java.io.PrintWriter(new java.io.File(dir, s"${name}_$tag.txt"))
+    try w.println(df.queryExecution.explainString(FormattedMode))
+    finally w.close()
+  }
+
   private def walk(p: SparkPlan, depth: Int, out: StringBuilder): Unit = {
     val keep = Seq("numOutputRows", "dataSize", "time in aggregation build",
       "aggregate time", "sort time", "shuffle write time", "time to build",
@@ -82,20 +94,12 @@ object ProfileQ {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileQ <query> [<query> ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
     val spark = GraftSession.builder(appName = "graft-profile")
     // plan-only mode: dump formatted plans without executing (cheap
     // "before" evidence capture for queries about to be changed)
     if (sys.env.get("SPARK_GRAFT_PLAN_ONLY").contains("1")) {
-      val planDir = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r11"))
-      planDir.mkdirs()
       for (name <- args) {
-        val w = new java.io.PrintWriter(
-          new java.io.File(planDir, s"${name}_$tag.txt"))
-        try w.println(SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-        finally w.close()
+        writePlan(name, SparkEntry.queries(name)(spark, sfDir))
         System.err.println(s"[planonly] $name dumped")
       }
       spark.stop()
@@ -153,15 +157,7 @@ object ProfileQ {
       println(sb.result())
       graft.plans.Checkpoints.release(df2)
       // formatted plan dump for the committed evidence
-      val planDir = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r11"))
-      planDir.mkdirs()
-      val w = new java.io.PrintWriter(
-        new java.io.File(planDir, s"${name}_$tag.txt"))
-      try {
-        val df3 = SparkEntry.queries(name)(spark, sfDir)
-        w.println(df3.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-      } finally w.close()
+      writePlan(name, SparkEntry.queries(name)(spark, sfDir))
     }
     spark.stop()
   }

@@ -4524,8 +4524,11 @@ object SparkEntry {
 
   /** Committed fixtures (CSV derived once from sf0.001 part + a synthetic
     * date column; tiny.png/tiny.wav for the real-decode gate) — gates read
-    * them from a stable path. */
-  private val fixtureDir = "/root/repo/src/test/resources/fixtures"
+    * them from the checkout whose compiled classes are running: this
+    * class's code source is `<checkout>/target/scala-2.13/classes`. */
+  private[graft] val fixtureDir: String =
+    java.nio.file.Paths.get(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+      .resolve("../../../src/test/resources/fixtures").normalize.toString
   private val csvFixture = s"$fixtureDir/parts_fixture.csv"
   private val quotedFixture = s"$fixtureDir/quoted_fixture.csv"
   private val jsonlFixture = s"$fixtureDir/docs_fixture.jsonl"

@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
  * `Scan ExistingRDD` — the eager checkpoint hides the real plan from
  * audit. This diagnostic main rebuilds the operator's LIVE internal
  * frame (before the final checkpoint) the same way the query gate does
- * and dumps its formatted plan to
- * `<SPARK_GRAFT_PLAN_DIR, default plans/r11>/<name>_<tag>.txt`.
+ * and dumps its formatted plan with [[ProfileQ.writePlan]].
  *
  * Usage: `SubplanDump <name> [<name> ...]` (or `all`). Diagnostic
  * only — never part of the bench/oracle surface.
@@ -60,20 +59,12 @@ object SubplanDump {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: SubplanDump <name> [<name> ...] | all")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
     val spark = GraftSession.builder(appName = "graft-subplan")
     val reg = subplans(spark, sfDir)
     val names = if (args.sameElements(Array("all"))) reg.keys.toSeq.sorted
                 else args.toSeq
-    val dir = new java.io.File(
-      sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r11"))
-    dir.mkdirs()
     for (n <- names) {
-      val df = reg(n)()
-      val w = new java.io.PrintWriter(new java.io.File(dir, s"${n}_$tag.txt"))
-      try w.println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      finally w.close()
+      ProfileQ.writePlan(n, reg(n)())
       System.err.println(s"[subplan] $n dumped")
     }
     spark.stop()

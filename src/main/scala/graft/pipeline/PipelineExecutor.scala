@@ -44,8 +44,8 @@ object ErrorPolicy extends Enumeration {
  *
  * Deliberate difference (SURVEY §4): results stay LAZY temp views, not
  * eagerly materialized tables — Catalyst fuses the whole chain and pushes
- * filters/pruning into the scan. Call `materialize(name)` (cache) only for
- * interactive re-use.
+ * filters/pruning into the scan, at the cost of re-running the upstream
+ * chain on every preview or collect of a later stage.
  */
 final class PipelineExecutor(val spark: SparkSession) {
 
@@ -152,15 +152,6 @@ final class PipelineExecutor(val spark: SparkSession) {
     * rows (ui/src/App.tsx:610-611, consumed at ui/src/App.tsx:1845-1848). */
   def describe(name: String): Seq[(String, String)] =
     table(name).schema.fields.toSeq.map(f => (f.name, duckTypeName(f.dataType)))
-
-  /** Pin a result for repeated interactive use (the reference's eager
-    * CREATE TABLE materialization, as an opt-in). */
-  def materialize(name: String): DataFrame = {
-    val df = table(name).cache()
-    tables(name) = df
-    df.createOrReplaceTempView(name)
-    df
-  }
 
   /** Spark → DuckDB-style type names, for API parity with DESCRIBE output. */
   def duckTypeName(dt: DataType): String = dt match {

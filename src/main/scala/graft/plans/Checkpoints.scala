@@ -79,11 +79,10 @@ object Checkpoints {
     * Returns the number of storage handles released. No-op (0) for
     * plans with no checkpoint leaves — safe to call on any frame.
     * Deliberately does NOT touch `InMemoryRelation` (`.cache()`)
-    * leaves: a cached table is a deliberate cross-query PIN
-    * (PipelineExecutor.materialize) with its own unpersist path, and
-    * unlike a checkpoint it can recompute if evicted — the leak this
-    * contract closes is specifically the unrecomputable, caller-owned
-    * checkpoint block. */
+    * leaves: whoever called `.cache()` owns that frame and its
+    * `unpersist`, and unlike a checkpoint a cached block can recompute
+    * if evicted — the leak this contract closes is specifically the
+    * unrecomputable, caller-owned checkpoint block. */
   def release(df: DataFrame, blocking: Boolean = false): Int = {
     var n = 0
     val hadoopConf = df.sparkSession.sparkContext.hadoopConfiguration

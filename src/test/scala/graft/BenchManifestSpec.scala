@@ -2,6 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
+
 /**
  * Keeps `tools/expected_queries.txt` — the board-coverage manifest the
  * Bench main checks its emitted board against — in lockstep with the
@@ -37,5 +40,31 @@ class BenchManifestSpec extends AnyFunSuite {
     assert(e.getMessage.contains("q_no_such_query"))
     assert(!e.getMessage.contains("q_pipeline"))
     assert(org.apache.spark.sql.SparkSession.getDefaultSession == before)
+  }
+
+  test("README's Layout block names every main and no main that is gone") {
+    val sources = scala.util.Using.resource(
+        Files.walk(Path.of("src/main/scala/graft")))(_.iterator.asScala.toSeq)
+      .filter(_.toString.endsWith(".scala")).map(Files.readString)
+    // each `def main(` belongs to the last `object` declared above it
+    val objectDecl = """(?m)^\s*object\s+(\w+)""".r
+    val objects = sources.flatMap(objectDecl.findAllMatchIn(_).map(_.group(1))).toSet
+    val mains = sources.flatMap { text =>
+      """def main\(""".r.findAllMatchIn(text).map { m =>
+        objectDecl.findAllMatchIn(text.take(m.start)).toSeq.last.group(1)
+      }
+    }.toSet
+    assert(mains.contains("Bench") && mains.contains("Verify"), mains)
+
+    val readme = Files.readString(Path.of("README.md"))
+    val layout = readme.drop(readme.indexOf("## Layout")).split("```")(1)
+    // top-level entries: two-space indent, capitalized (`Name` or `A/B`)
+    val named = """(?m)^  ([A-Z][\w/]*)""".r.findAllMatchIn(layout)
+      .flatMap(_.group(1).split('/')).toSet
+    assert((mains -- named).isEmpty,
+      s"README Layout misses mains: ${(mains -- named).toSeq.sorted.mkString(",")}")
+    assert((named -- objects).isEmpty,
+      s"README Layout names what no longer exists: " +
+        (named -- objects).toSeq.sorted.mkString(","))
   }
 }

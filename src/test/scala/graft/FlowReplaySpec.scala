@@ -4,11 +4,14 @@ import graft.pipeline.PipelineExecutor
 import graft.planner.TransformResponse
 import org.apache.spark.sql.functions._
 
+import java.nio.file.{Files, Path}
+
 /**
- * Pins the [[FlowReplay]] fixture path at spec scale: the verbatim
- * 6-stage transform-response JSON must parse, survive StageRepair with
- * all 6 stages intact, and execute end to end through the lazy-view
- * pipeline — so the sf1 replay main can't rot between rounds.
+ * Pins the planner-response fixture `fixtures/six_stage_response.json`:
+ * a verbatim 6-stage transform response (JOIN → FILTER → GROUP → SORT →
+ * SELECT → CUSTOM, the same flow perfbench times as `Etl.llmFlow`) must
+ * parse, survive StageRepair with all 6 stages intact, and execute end
+ * to end through the lazy-view pipeline.
  */
 class FlowReplaySpec extends SparkTestBase {
 
@@ -18,7 +21,8 @@ class FlowReplaySpec extends SparkTestBase {
       ex.register(t, spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet"))
     }
     val plan = TransformResponse.toPlan(
-      TransformResponse.parse(FlowReplay.sixStageResponse),
+      TransformResponse.parse(Files.readString(Path.of(
+        getClass.getResource("/fixtures/six_stage_response.json").toURI))),
       n => scala.util.Try(ex.table(n).columns.toSeq).toOption)
     assert(plan.isValid && plan.stages.size == 6,
       s"repair kept ${plan.stages.size} of 6 stages")

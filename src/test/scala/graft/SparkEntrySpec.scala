@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 /** Smoke: every declared query runs at sf0.001 and yields rows; every
   * oracle key refers to a declared query. */
 class SparkEntrySpec extends SparkTestBase {
@@ -8,6 +10,16 @@ class SparkEntrySpec extends SparkTestBase {
 
   test("entry produces rows") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  test("fixture gates read the fixtures of the running checkout") {
+    // test classes live in <checkout>/target/scala-2.13/test-classes
+    val checkout = Paths.get(
+      getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+      .getParent.getParent.getParent
+    val dir = Paths.get(SparkEntry.fixtureDir)
+    assert(dir == checkout.resolve("src/test/resources/fixtures"), dir)
+    assert(Files.isRegularFile(dir.resolve("parts_fixture.csv")))
   }
 
   test("oracleSql keys are a subset of queries") {

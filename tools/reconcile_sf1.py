@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
-"""Reconcile the sf1 full-board run against the ScaleProbe predictions:
-for every query with a measured 10x-replication probe ratio in SCALING.md,
-compare the observed sf1/sf0.1 ratio (sf0.1 = min of the r8a/r8b boards)
+"""Reconcile the sf1 full-board run against the ScaleProbe predictions.
+The ScaleProbe main is deleted; its 10x-replication probe ratios are now
+read only from SCALING.md's committed tables. For every query with such a
+ratio, compare the observed sf1/sf0.1 ratio (sf0.1 = min of the r8a/r8b boards)
 and flag any family whose observed ratio exceeds probe_ratio * 1.5.
 
 Usage: reconcile_sf1.py <BENCH_full_sf1.json> <r8a.json> <r8b.json> <SCALING.md>

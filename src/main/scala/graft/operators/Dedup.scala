@@ -3,7 +3,7 @@ package graft.operators
 import graft.plans.Checkpoints.LineageOps
 import graft.GraftSession.simhash64
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -303,19 +303,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
 
-  /**
-   * MinHash-LSH near-dup pairs with ESTIMATED Jaccard confirm: instead of
-   * joining the shingle arrays back for exact verification, candidates
-   * are scored by their signature agreement fraction — an unbiased
-   * estimator of Jaccard with standard error ≈ √(j(1-j)/k) (±0.05 at
-   * k = 64, j = 0.8).
-   *
-   * This is the 100 TB confirm path: the verify join carries k longs per
-   * doc (fixed 512 bytes at k = 64) instead of full shingle sets, so its
-   * cost is independent of document size. Use [[minhashPairs]] when exact
-   * Jaccard is required; use this when candidates vastly outnumber true
-   * pairs or documents are large.
-   */
   /** Shared MinHash plumbing: `(signatures, banded)` — one native
     * signature pass, then the b band keys (band-salted xxhash64 of each
     * band's r signature rows). */
@@ -383,29 +370,31 @@ object Dedup {
     cand
       .join(sig.select(col("id").as("id_new"), col("sig").as("sig_a")), "id_new")
       .join(histSig.select(col("id").as("id_hist"), col("sig").as("sig_b")), "id_hist")
-      .withColumn("jaccard_est",
-        aggregate(zip_with(col("sig_a"), col("sig_b"),
-            (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, m) => acc + m).cast("double") / lit(numHashes.toDouble))
+      .withColumn("jaccard_est", signatureAgreement(numHashes))
       .filter(col("jaccard_est") >= threshold)
       .select(col("id_new"), col("id_hist"),
         round(col("jaccard_est"), 6).as("jaccard_est"))
   }
 
+  /**
+   * MinHash-LSH near-dup pairs with ESTIMATED Jaccard confirm: instead of
+   * joining the shingle arrays back for exact verification, candidates
+   * are scored by their signature agreement fraction — an unbiased
+   * estimator of Jaccard with standard error ≈ √(j(1-j)/k) (±0.05 at
+   * k = 64, j = 0.8).
+   *
+   * This is the 100 TB confirm path: the verify join carries k longs per
+   * doc (fixed 512 bytes at k = 64) instead of full shingle sets, so its
+   * cost is independent of document size. Use [[minhashPairs]] when exact
+   * Jaccard is required; use this when candidates vastly outnumber true
+   * pairs or documents are large.
+   */
   def minhashPairsEstimated(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.8): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rows = numHashes / bands
-    val sig = df.select(col(idCol).as("id"),
-        hashedShingleSet(col(textCol), shingleN).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .select(col("id"), minhashSignature(col("shingles"), numHashes).as("sig"))
-    val banded = sig.select(col("id"), posexplode(
-      array((0 until bands).map(j =>
-        xxhash64(lit(j) +: (0 until rows).map(k => col("sig")(j * rows + k)): _*)): _*))
-      .as(Seq("band", "bucket")))
+    val (sig, banded) = minhashSigAndBands(df, idCol, textCol,
+      shingleN, numHashes, bands)
     val cand = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.id") < col("b.id"))
@@ -414,13 +403,17 @@ object Dedup {
     cand
       .join(sig.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(sig.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
-      .withColumn("jaccard_est",
-        aggregate(zip_with(col("sig_a"), col("sig_b"),
-            (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, m) => acc + m).cast("double") / lit(numHashes.toDouble))
+      .withColumn("jaccard_est", signatureAgreement(numHashes))
       .filter(col("jaccard_est") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard_est"), 6).as("jaccard_est"))
   }
+
+  /** The estimated Jaccard of a candidate pair: the fraction of the
+    * `numHashes` MinHash rows on which `sig_a` and `sig_b` agree. */
+  private def signatureAgreement(numHashes: Int): Column =
+    aggregate(zip_with(col("sig_a"), col("sig_b"),
+        (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (acc, m) => acc + m).cast("double") / lit(numHashes.toDouble)
 
   /**
    * Connected components over a near-dup pair graph — the step that turns

@@ -53,7 +53,10 @@ object StageRepair {
       case _                => Nil
     }
 
-    raw.tpe.toUpperCase match {
+    // A repaired stage that the ADT's own `require` still rejects (joinType
+    // CROSS, blank CUSTOM sql, a conditions array with no objects) is
+    // unrepairable, and an unrepairable stage is dropped.
+    try raw.tpe.toUpperCase match {
       case "JOIN" =>
         val fromValue = str("value").filterNot(v => invalidJoinValues(v.toLowerCase))
         val inferred = inferJoinKey(desc)
@@ -117,7 +120,7 @@ object StageRepair {
         Some(LoadStage(raw.id, raw.description,
           str("tableName").getOrElse(""), str("fileName").getOrElse("")))
       case _ => None
-    }
+    } catch { case _: IllegalArgumentException => None }
   }
 
   // ----------------------------------------------------------- JOIN repair

@@ -2,7 +2,7 @@ package graft.planner
 
 import org.json4s._
 import org.json4s.JsonDSL._
-import org.json4s.jackson.JsonMethods
+import PromptBuilder.str
 
 /**
  * Pure port of the reference's `/api/voice/chat-audio` surface — the
@@ -23,9 +23,6 @@ import org.json4s.jackson.JsonMethods
  */
 object ChatAudioBuilder {
 
-  /** Same model id (server/index.js:1177). */
-  val ModelId: String = PromptBuilder.ModelId
-
   final case class ChatMessage(role: String, content: String) // "user"|"assistant"
 
   /** One model turn (server/index.js:1181-1199 response schema). */
@@ -34,18 +31,9 @@ object ChatAudioBuilder {
       response: String,
       shouldTransform: Boolean)
 
-  final case class ChatAudioRequest(
-      model: String,
-      responseMimeType: String,
-      responseSchema: JObject,
-      prompt: String,
-      audioMimeType: String)
-
   /** The `{transcript, response, shouldTransform}` response schema
     * (server/index.js:1181-1199). */
-  val responseSchema: JObject = {
-    def str(desc: String): JObject =
-      ("type" -> "STRING") ~ ("description" -> desc)
+  val responseSchema: JObject =
     ("type" -> "OBJECT") ~ ("properties" -> (
       ("transcript" -> str(
         "The transcribed text of what the user said in the audio")) ~
@@ -54,17 +42,13 @@ object ChatAudioBuilder {
           ("description" -> ("Whether the user wants to proceed with a data transformation. " +
             "Set to true if the user confirms they want to transform the data, " +
             "false if they're still discussing or asking questions."))))))
-  }
 
   /** Schema block (server/index.js:1213-1215): single-table JSON or the
     * no-tables sentence — this surface never takes `allSchemas`. */
   def schemaInfo(schema: Seq[(String, String)]): String =
-    if (schema.nonEmpty) {
-      val cols = JsonMethods.compact(JsonMethods.render(
-        JArray(schema.toList.map { case (n, t) =>
-          ("column_name" -> n) ~ ("column_type" -> t) })))
-      s"Current Table Schema (DuckDB):\n$cols"
-    } else "No tables are currently loaded."
+    if (schema.nonEmpty)
+      s"Current Table Schema (DuckDB):\n${PromptBuilder.columnListing(schema)}"
+    else "No tables are currently loaded."
 
   /** History block (server/index.js:1218-1222): empty string for no
     * history, else the "Previous conversation:" listing with User/
@@ -122,9 +106,8 @@ object ChatAudioBuilder {
   def buildRequest(
       schema: Seq[(String, String)],
       history: Seq[ChatMessage],
-      audioMimeType: String = VoicePromptBuilder.DefaultAudioMimeType): ChatAudioRequest =
-    ChatAudioRequest(ModelId, "application/json", responseSchema,
-      buildPrompt(schema, history), audioMimeType)
+      audioMimeType: String = VoicePromptBuilder.DefaultAudioMimeType): PlannerRequest =
+    PlannerRequest(buildPrompt(schema, history), responseSchema, Some(audioMimeType))
 
   // ------------------------------------------------------------ client
 

@@ -8,6 +8,7 @@ import org.json4s.jackson.JsonMethods
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
+import java.util.Base64
 
 /**
  * Live HTTP [[Planner]] — the drop-in behind the seam the rest of the
@@ -35,18 +36,31 @@ object HttpPlanner {
   final class PlannerHttpException(val status: Int, msg: String)
     extends RuntimeException(msg)
 
-  /** Shared generateContent POST: parts in, forced-schema reply text
-    * out. Used by both the text planner and the voice transcriber —
-    * the surfaces differ only in their parts list. */
+  /** One client for every surface and instance (`HttpClient` is
+    * thread-safe and pools connections). It sets no connect timeout: each
+    * request's own timeout bounds the whole exchange, connecting included
+    * (a connect that stalls fails with `HttpConnectTimeoutException` at
+    * the request timeout). */
+  private lazy val client = HttpClient.newHttpClient()
+
+  /** The generateContent POST every surface shares: the prompt as the
+    * first part then, when the request names an audio MIME type, `audio`
+    * as a base64 `inline_data` part (the reference's
+    * `model.generateContent([prompt, audioPart])`, server/index.js:
+    * 1073-1082). The reply is forced into JSON of the request's schema;
+    * its text is returned. */
   private[planner] def generateContent(
-      client: HttpClient, baseUrl: String, apiKey: String, model: String,
-      timeout: Duration, parts: List[JObject],
-      responseMimeType: String, responseSchema: JObject): String = {
+      baseUrl: String, apiKey: String, model: String, timeout: Duration,
+      req: PlannerRequest, audio: Array[Byte] = Array.emptyByteArray): String = {
+    val audioPart = req.audioMimeType.map(mime => ("inline_data" ->
+      (("mime_type" -> mime) ~
+        ("data" -> Base64.getEncoder.encodeToString(audio)))): JObject)
+    val parts = (("text" -> req.prompt): JObject) :: audioPart.toList
     val body: JObject =
       ("contents" -> List(("parts" -> parts): JObject)) ~
       ("generationConfig" ->
-        (("responseMimeType" -> responseMimeType) ~
-          ("responseSchema" -> responseSchema)))
+        (("responseMimeType" -> "application/json") ~
+          ("responseSchema" -> req.responseSchema)))
     val http = HttpRequest.newBuilder(
         URI.create(s"$baseUrl/v1beta/models/$model:generateContent"))
       .header("Content-Type", "application/json")
@@ -90,15 +104,9 @@ final class HttpPlanner(
     model: String = PromptBuilder.ModelId,
     timeout: Duration = Duration.ofSeconds(30)) extends Planner {
 
-  private val client = HttpClient.newBuilder()
-    .connectTimeout(timeout)
-    .build()
-
   override def plan(userPrompt: String, schemas: Seq[TableSchema]): Plan = {
-    val req = PromptBuilder.transformRequest(userPrompt, schemas)
-    val text = HttpPlanner.generateContent(client, baseUrl, apiKey, model,
-      timeout, List(("text" -> req.prompt): JObject),
-      req.responseMimeType, req.responseSchema)
+    val text = HttpPlanner.generateContent(baseUrl, apiKey, model, timeout,
+      PromptBuilder.transformRequest(userPrompt, schemas))
     TransformResponse.toPlan(TransformResponse.parse(text), schemaOf)
   }
 }
@@ -109,19 +117,14 @@ final class HttpPlanner(
  * {mime_type, data: base64}}]`, matching the reference's
  * `model.generateContent([prompt, audioPart])` order
  * (ref: server/index.js:1073-1082). The JSON-forced reply goes through
- * [[VoicePromptBuilder.normalize]] — transcript extraction, invalid-audio
- * field stripping — exactly like the mock path, so gating behavior is
- * transport-independent.
+ * [[VoicePromptBuilder.normalize]] — the transform reply decoder, then
+ * transcript extraction — so gating behavior is transport-independent.
  */
 final class HttpVoiceTranscriber(
     baseUrl: String,
     apiKey: String,
-    model: String = VoicePromptBuilder.ModelId,
+    model: String = PromptBuilder.ModelId,
     timeout: Duration = Duration.ofSeconds(60)) extends VoiceTranscriber {
-
-  private val client = HttpClient.newBuilder()
-    .connectTimeout(timeout)
-    .build()
 
   def command(audio: Array[Byte], schema: Seq[(String, String)],
       allSchemas: Seq[TableSchema]): VoicePromptBuilder.VoiceCommandResponse =
@@ -130,14 +133,8 @@ final class HttpVoiceTranscriber(
   def command(audio: Array[Byte], schema: Seq[(String, String)],
       allSchemas: Seq[TableSchema], audioMimeType: String)
       : VoicePromptBuilder.VoiceCommandResponse = {
-    val req = VoicePromptBuilder.buildRequest(schema, allSchemas, audioMimeType)
-    val audioB64 = java.util.Base64.getEncoder.encodeToString(audio)
-    val parts = List(
-      ("text" -> req.prompt): JObject,
-      ("inline_data" ->
-        (("mime_type" -> req.audioMimeType) ~ ("data" -> audioB64))): JObject)
-    val text = HttpPlanner.generateContent(client, baseUrl, apiKey, model,
-      timeout, parts, req.responseMimeType, req.responseSchema)
+    val text = HttpPlanner.generateContent(baseUrl, apiKey, model, timeout,
+      VoicePromptBuilder.buildRequest(schema, allSchemas, audioMimeType), audio)
     VoicePromptBuilder.normalize(JsonMethods.parse(text))
   }
 }
@@ -154,25 +151,15 @@ final class HttpVoiceTranscriber(
 final class HttpChatAudio(
     baseUrl: String,
     apiKey: String,
-    model: String = ChatAudioBuilder.ModelId,
+    model: String = PromptBuilder.ModelId,
     timeout: Duration = Duration.ofSeconds(60)) {
-
-  private val client = HttpClient.newBuilder()
-    .connectTimeout(timeout)
-    .build()
 
   def turn(audio: Array[Byte], schema: Seq[(String, String)],
       history: Seq[ChatAudioBuilder.ChatMessage],
       audioMimeType: String = VoicePromptBuilder.DefaultAudioMimeType)
       : ChatAudioBuilder.ChatTurn = {
-    val req = ChatAudioBuilder.buildRequest(schema, history, audioMimeType)
-    val audioB64 = java.util.Base64.getEncoder.encodeToString(audio)
-    val parts = List(
-      ("text" -> req.prompt): JObject,
-      ("inline_data" ->
-        (("mime_type" -> req.audioMimeType) ~ ("data" -> audioB64))): JObject)
-    val text = HttpPlanner.generateContent(client, baseUrl, apiKey, model,
-      timeout, parts, req.responseMimeType, req.responseSchema)
+    val text = HttpPlanner.generateContent(baseUrl, apiKey, model, timeout,
+      ChatAudioBuilder.buildRequest(schema, history, audioMimeType), audio)
     val jv = JsonMethods.parse(text)
     def str(field: String, dflt: String): String = jv \ field match {
       case JString(s) => s

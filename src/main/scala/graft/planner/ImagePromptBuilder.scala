@@ -2,13 +2,14 @@ package graft.planner
 
 import org.json4s._
 import org.json4s.JsonDSL._
+import PromptBuilder.{aggregationItem, orderByItem, str, strArr}
 
 /**
  * Pure port of the reference's `/api/analyze-flow-image` request assembly —
  * the second LLM surface beside `/api/transform` (which [[PromptBuilder]]
  * ports): given the existing-flow context the client sends (reference:
- * ui/src/App.tsx:1806-1867), produce the exact vision-call payload — model
- * id, the `imageAnalysisResponseSchema` JSON-forced response schema
+ * ui/src/App.tsx:1806-1867), produce the exact vision-call payload — the
+ * `imageAnalysisResponseSchema` JSON-forced response schema
  * (reference: server/index.js:336-465, wired at :518-524), and the
  * assembled prompt text with the `[LATEST]`-result-table priority rules
  * (reference: server/index.js:530-905).
@@ -22,10 +23,6 @@ import org.json4s.JsonDSL._
  * and the two halves meet in ImageFlowSpec.
  */
 object ImagePromptBuilder {
-
-  /** Same vision-capable model id as the transform surface
-    * (server/index.js:519). */
-  val ModelId: String = PromptBuilder.ModelId
 
   // ----- context payload the client assembles (ui/src/App.tsx:1806-1867)
 
@@ -56,16 +53,9 @@ object ImagePromptBuilder {
     def hasExisting: Boolean = existingTables.nonEmpty || existingStages.nonEmpty
   }
 
-  final case class ImageAnalysisRequest(
-      model: String,
-      responseMimeType: String,
-      responseSchema: JObject,
-      prompt: String)
-
   /** Full request payload for an analyze-flow-image call. */
-  def imageAnalysisRequest(context: Option[FlowContext]): ImageAnalysisRequest =
-    ImageAnalysisRequest(ModelId, "application/json",
-      imageAnalysisResponseSchema, buildPrompt(context))
+  def imageAnalysisRequest(context: Option[FlowContext]): PlannerRequest =
+    PlannerRequest(buildPrompt(context), imageAnalysisResponseSchema)
 
   // ------------------------------------------------- context block assembly
 
@@ -459,13 +449,6 @@ REMEMBER: For a data_table with existing context, your primary goal is INTEGRATI
 
   // --------------------------------------------------- the response schema
 
-  private def str(desc: String): JObject =
-    ("type" -> "STRING") ~ ("description" -> desc)
-
-  private def strArr(desc: String): JObject =
-    ("type" -> "ARRAY") ~ ("items" -> (("type" -> "STRING"): JObject)) ~
-      ("description" -> desc)
-
   /**
    * `imageAnalysisResponseSchema` (server/index.js:336-465): top-level
    * `{imageType, explanation, tables[], transformationStages[]}` with
@@ -492,15 +475,6 @@ REMEMBER: For a data_table with existing context, your primary goal is INTEGRATI
             ("description" -> ("Array of sample data rows (provide at least 5-10 rows for each table). " +
               "Each row is an array of values matching the order of columns in the columns array.")))))) ~
         ("required" -> List("name", "columns", "rows"))
-
-    val aggregationItem: JObject =
-      ("type" -> "OBJECT") ~ ("properties" ->
-        (("function" -> str("Aggregation function: 'SUM', 'COUNT', 'AVG', 'MAX', 'MIN', etc.")) ~
-          ("column" -> str("Column to aggregate")) ~
-          ("alias" -> str("Optional alias for the aggregation"))))
-    val orderByItem: JObject =
-      ("type" -> "OBJECT") ~ ("properties" ->
-        (("column" -> str("")) ~ ("direction" -> str("'ASC' or 'DESC'"))))
 
     val stageData: JObject =
       ("type" -> "OBJECT") ~ ("properties" -> (

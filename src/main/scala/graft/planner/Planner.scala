@@ -3,6 +3,7 @@ package graft.planner
 import graft.model.Stage
 import graft.sql.SqlStageParser
 import graft.viz.ChartConfig
+import org.json4s.JObject
 
 /**
  * The LLM planning surface (SURVEY §2.8) as a pluggable trait: NL prompt +
@@ -17,6 +18,17 @@ import graft.viz.ChartConfig
  * changes).
  */
 final case class TableSchema(name: String, columns: Seq[(String, String)])
+
+/** What every planner surface (transform, voice, chat-audio, image) sends
+  * its model: the assembled prompt, the JSON schema the reply is forced
+  * into and, on the two voice surfaces, the MIME type of the audio part
+  * that follows the prompt. The model id and the JSON-forced
+  * `responseMimeType` are the same for every surface; the transport
+  * ([[HttpPlanner.generateContent]]) sets them. */
+final case class PlannerRequest(
+    prompt: String,
+    responseSchema: JObject,
+    audioMimeType: Option[String] = None)
 
 final case class Plan(
     sql: String,

@@ -8,39 +8,46 @@ import org.json4s.jackson.JsonMethods
  * Pure port of the reference's `/api/transform` request assembly
  * (reference: server/index.js:226-333): given the table schemas and the
  * user's NL goal, produce the exact request payload the reference sends to
- * its LLM — model id, JSON-forced generation config with the structured
- * response schema (server/index.js:84-195), and the assembled prompt text
- * with the schema listing and SQL→stage decomposition rules.
+ * its LLM — the structured response schema (server/index.js:84-195) and
+ * the assembled prompt text with the schema listing and SQL→stage
+ * decomposition rules; the transport adds the model id and the JSON-forced
+ * generation config.
  *
  * Transport is out of scope by design (offline sandbox): an HTTP planner
- * implementation serializes [[TransformRequest]] verbatim; [[MockPlanner]]
+ * implementation serializes the [[PlannerRequest]] verbatim; [[MockPlanner]]
  * and the specs consume it directly. This makes the full planner surface
  * testable end-to-end without a network boundary.
+ *
+ * The schema listing and the JSON-schema helpers below are shared by every
+ * planner surface; each surface keeps its own prompt rule text, which is
+ * the parity contract.
  */
 object PromptBuilder {
 
-  /** The reference's model id (server/index.js:250). */
+  /** The reference's model id (server/index.js:250), the same on every
+    * surface (:519, :978, :1177). */
   val ModelId = "gemini-3-flash-preview"
 
-  final case class TransformRequest(
-      model: String,
-      responseMimeType: String,
-      responseSchema: JObject,
-      prompt: String)
+  /** `[{"column_name":…,"column_type":…},…]`: how every prompt lists a
+    * table's columns. */
+  private[planner] def columnListing(columns: Seq[(String, String)]): String =
+    JsonMethods.compact(JsonMethods.render(
+      JArray(columns.toList.map { case (n, t) =>
+        ("column_name" -> n) ~ ("column_type" -> t) })))
 
   /**
    * Schema block of the prompt: the multi-table listing when `allSchemas`
-   * is known, else the single-table fallback (server/index.js:257-259).
+   * is known, else the single-table listing of `schema`. The transform
+   * surface passes no `schema` (server/index.js:257-259, so its fallback
+   * lists `[]`); the voice surface passes the current table's
+   * (server/index.js:994-996).
    */
-  def schemasInfo(allSchemas: Seq[TableSchema]): String =
+  def schemasInfo(allSchemas: Seq[TableSchema],
+                  schema: Seq[(String, String)] = Nil): String =
     if (allSchemas.nonEmpty)
-      "Available Tables:\n" + allSchemas.map { s =>
-        val cols = JsonMethods.compact(JsonMethods.render(
-          JArray(s.columns.toList.map { case (n, t) =>
-            ("column_name" -> n) ~ ("column_type" -> t) })))
-        s"- ${s.name}: $cols"
-      }.mkString("\n")
-    else "Current Table Schema (DuckDB):\n[]"
+      "Available Tables:\n" + allSchemas.map(s =>
+        s"- ${s.name}: ${columnListing(s.columns)}").mkString("\n")
+    else s"Current Table Schema (DuckDB):\n${columnListing(schema)}"
 
   /** The prompt text (server/index.js:261-316), verbatim rule set. */
   def buildPrompt(userPrompt: String, allSchemas: Seq[TableSchema]): String =
@@ -85,16 +92,29 @@ object PromptBuilder {
        |   - Break down complex queries into multiple stages in the correct order (e.g., JOIN first, then GROUP, then SORT).""".stripMargin
 
   /** Full request payload for a transform call. */
-  def transformRequest(userPrompt: String, allSchemas: Seq[TableSchema]): TransformRequest =
-    TransformRequest(ModelId, "application/json", responseSchema,
-      buildPrompt(userPrompt, allSchemas))
+  def transformRequest(userPrompt: String, allSchemas: Seq[TableSchema]): PlannerRequest =
+    PlannerRequest(buildPrompt(userPrompt, allSchemas), responseSchema)
 
-  private def str(desc: String): JObject =
+  // ------------------------------------- JSON-schema helpers, all surfaces
+
+  private[planner] def str(desc: String): JObject =
     ("type" -> "STRING") ~ ("description" -> desc)
 
-  private def strArr(desc: String): JObject =
+  private[planner] def strArr(desc: String): JObject =
     ("type" -> "ARRAY") ~ ("items" -> (("type" -> "STRING"): JObject)) ~
       ("description" -> desc)
+
+  /** Item shapes of the stage-data `aggregations` and `orderBy` arrays,
+    * the same in the transform and image-analysis schemas. */
+  private[planner] val aggregationItem: JObject =
+    ("type" -> "OBJECT") ~ ("properties" ->
+      (("function" -> str("Aggregation function: 'SUM', 'COUNT', 'AVG', 'MAX', 'MIN', etc.")) ~
+        ("column" -> str("Column to aggregate")) ~
+        ("alias" -> str("Optional alias for the aggregation"))))
+
+  private[planner] val orderByItem: JObject =
+    ("type" -> "OBJECT") ~ ("properties" ->
+      (("column" -> str("")) ~ ("direction" -> str("'ASC' or 'DESC'"))))
 
   /**
    * The structured JSON response schema forced onto the model
@@ -108,14 +128,6 @@ object PromptBuilder {
       ("type" -> "OBJECT") ~ ("properties" ->
         (("column" -> str("")) ~ ("operator" -> str("")) ~
           ("value" -> str("")) ~ ("logic" -> str("'AND' or 'OR'"))))
-    val aggregationItem: JObject =
-      ("type" -> "OBJECT") ~ ("properties" ->
-        (("function" -> str("Aggregation function: 'SUM', 'COUNT', 'AVG', 'MAX', 'MIN', etc.")) ~
-          ("column" -> str("Column to aggregate")) ~
-          ("alias" -> str("Optional alias for the aggregation"))))
-    val orderByItem: JObject =
-      ("type" -> "OBJECT") ~ ("properties" ->
-        (("column" -> str("")) ~ ("direction" -> str("'ASC' or 'DESC'"))))
 
     val stageData: JObject =
       ("type" -> "OBJECT") ~ ("properties" -> (

@@ -10,7 +10,10 @@ import org.json4s.jackson.JsonMethods
  * half of the HTTP seam: [[PromptBuilder]] assembles the request, this
  * object decodes the response into the engine's loosely-typed
  * [[RawStage]]s, ready for [[graft.pipeline.StageRepair]] →
- * [[graft.pipeline.PipelineExecutor]].
+ * [[graft.pipeline.PipelineExecutor]]. It is the one decoder of that
+ * reply shape: the voice surface's reply has the same schema
+ * (server/index.js:981), and [[VoicePromptBuilder.normalize]] decodes it
+ * here too.
  *
  * Shape per the reference's response schema (server/index.js:84-195) and
  * its client-side consumption (ui/src/App.tsx:1007-1060: `JSON.parse` of
@@ -54,17 +57,17 @@ object TransformResponse {
           tpe = optStr(s \ "type").getOrElse("CUSTOM"),
           description = optStr(s \ "description").getOrElse(""),
           data = s \ "data" match {
-            case JObject(fields) =>
-              fields.map { case (k, v) => k -> anyValue(v) }
-                .filterNot(_._2 == null).toMap
-            case _ => Map.empty[String, Any]
+            case JObject(fields) => objectValue(fields)
+            case _               => Map.empty[String, Any]
           })
       }
       case _ => Nil
     }
-    ParsedResponse(isValid, optStr(jv \ "sql"),
-      optStr(jv \ "explanation").getOrElse(""), chart,
-      if (isValid) stages else Nil) // invalid → stripped, like the voice path
+    val explanation = optStr(jv \ "explanation").getOrElse("")
+    // invalid → stripped to {isValid, explanation}, as the voice endpoint
+    // strips it (server/index.js:1092-1129)
+    if (isValid) ParsedResponse(isValid, optStr(jv \ "sql"), explanation, chart, stages)
+    else ParsedResponse(isValid, None, explanation, None, Nil)
   }
 
   /** [[ParsedResponse]] → the engine's [[Plan]]: stages go through
@@ -91,7 +94,12 @@ object TransformResponse {
     case JDecimal(d)     => d.toString
     case JBool(b)        => b
     case JArray(xs)      => xs.map(anyValue)
-    case JObject(fields) => fields.map { case (k, v) => k -> anyValue(v) }.toMap
+    case JObject(fields) => objectValue(fields)
     case _               => null
   }
+
+  /** A JSON object's fields, at any depth; a `null` field counts as
+    * absent, so repair's defaults apply to it. */
+  private def objectValue(fields: List[JField]): Map[String, Any] =
+    fields.map { case (k, v) => k -> anyValue(v) }.filterNot(_._2 == null).toMap
 }

@@ -1,8 +1,6 @@
 package graft.planner
 
-import org.json4s._
-import org.json4s.JsonDSL._
-import org.json4s.jackson.JsonMethods
+import org.json4s.JValue
 
 /**
  * Pure port of the reference's `/api/voice/command` surface — the third
@@ -27,43 +25,9 @@ import org.json4s.jackson.JsonMethods
  */
 object VoicePromptBuilder {
 
-  /** Same audio-capable model id as the other surfaces
-    * (server/index.js:978: "gemini-3-flash-preview"). */
-  val ModelId: String = PromptBuilder.ModelId
-
   /** Default audio MIME type when the upload carries none
     * (server/index.js:1002). */
   val DefaultAudioMimeType = "audio/webm"
-
-  final case class VoiceCommandRequest(
-      model: String,
-      responseMimeType: String,
-      responseSchema: JObject,
-      prompt: String,
-      audioMimeType: String)
-
-  /**
-   * Schema block of the voice prompt (server/index.js:994-996): the
-   * multi-table listing when `allSchemas` is non-empty, else the
-   * single-table JSON fallback — note this differs from the transform
-   * surface, which never falls back to `schema`.
-   */
-  def schemasInfo(
-      schema: Seq[(String, String)],
-      allSchemas: Seq[TableSchema]): String =
-    if (allSchemas.nonEmpty)
-      "Available Tables:\n" + allSchemas.map { s =>
-        val cols = JsonMethods.compact(JsonMethods.render(
-          JArray(s.columns.toList.map { case (n, t) =>
-            ("column_name" -> n) ~ ("column_type" -> t) })))
-        s"- ${s.name}: $cols"
-      }.mkString("\n")
-    else {
-      val cols = JsonMethods.compact(JsonMethods.render(
-        JArray(schema.toList.map { case (n, t) =>
-          ("column_name" -> n) ~ ("column_type" -> t) })))
-      s"Current Table Schema (DuckDB):\n$cols"
-    }
 
   /** The voice-command prompt text (server/index.js:1004-1080), verbatim:
     * transcription instruction, the CRITICAL VALIDATION A/B/C gating
@@ -74,7 +38,7 @@ object VoicePromptBuilder {
       allSchemas: Seq[TableSchema]): String =
     s"""You are a Data Engineer Expert.
        |
-       |${schemasInfo(schema, allSchemas)}
+       |${PromptBuilder.schemasInfo(allSchemas, schema)}
        |
        |The user has provided a VOICE COMMAND describing how they want to transform their dataset.
        |Listen to the audio carefully and:
@@ -140,16 +104,15 @@ object VoicePromptBuilder {
        |   - Always analyze the SQL structure to determine the correct stage types. DO NOT default to CUSTOM unless truly necessary.
        |   - Break down complex queries into multiple stages in the correct order (e.g., JOIN first, then GROUP, then SORT).""".stripMargin
 
-  /** Full request payload: same JSON-forced generation config and the
-    * SAME response schema object as the transform surface
-    * (server/index.js:977-983 — `responseSchema` is shared). */
+  /** Full request payload: the SAME response schema object as the
+    * transform surface (server/index.js:977-983 — `responseSchema` is
+    * shared), plus the audio part's MIME type. */
   def buildRequest(
       schema: Seq[(String, String)],
       allSchemas: Seq[TableSchema],
-      audioMimeType: String = DefaultAudioMimeType): VoiceCommandRequest =
-    VoiceCommandRequest(ModelId, "application/json",
-      PromptBuilder.responseSchema, buildPrompt(schema, allSchemas),
-      audioMimeType)
+      audioMimeType: String = DefaultAudioMimeType): PlannerRequest =
+    PlannerRequest(buildPrompt(schema, allSchemas),
+      PromptBuilder.responseSchema, Some(audioMimeType))
 
   // ---------------------------------------------------------- response
 
@@ -161,14 +124,7 @@ object VoicePromptBuilder {
     * whatever the model returned (server/index.js:1131-1134). */
   final case class VoiceCommandResponse(
       transcript: String,
-      isValid: Boolean,
-      explanation: String,
-      sql: Option[String],
-      rawStages: Seq[JValue],
-      chartType: Option[String],
-      xAxis: Option[String],
-      yAxis: Option[String],
-      zAxis: Option[String])
+      reply: TransformResponse.ParsedResponse)
 
   private val userSaidRe =
     java.util.regex.Pattern.compile("User said:\\s*(.+?)(?:\\n|$)",
@@ -180,10 +136,10 @@ object VoicePromptBuilder {
    * "[No speech detected]" marker; else the first sentence with any
    * leading "User said:" stripped; else the placeholder.
    */
-  def extractTranscript(explanation: Option[String]): String =
+  def extractTranscript(explanation: String): String =
     explanation match {
-      case None | Some("") => DefaultTranscript
-      case Some(e) =>
+      case "" => DefaultTranscript
+      case e =>
         val m = userSaidRe.matcher(e)
         if (m.find()) m.group(1).trim
         else if (e.contains("[No speech detected]")) "[No speech detected]"
@@ -192,35 +148,16 @@ object VoicePromptBuilder {
     }
 
   /**
-   * Post-parse normalization (server/index.js:1092-1129): `isValid`
-   * defaults to true when absent (backward compatibility), transcript is
-   * extracted from the explanation, and when `isValid` is false every
-   * transformation field is STRIPPED even if the model emitted one.
+   * Post-parse normalization (server/index.js:1092-1129). The reply has
+   * the transform surface's schema, so [[TransformResponse.parseJValue]]
+   * decodes it: `isValid` defaults to true when absent (backward
+   * compatibility), and when it is false every transformation field is
+   * STRIPPED even if the model emitted one. The transcript is extracted
+   * from the explanation.
    */
   def normalize(parsed: JValue): VoiceCommandResponse = {
-    def optStr(field: String): Option[String] = parsed \ field match {
-      case JString(s) => Some(s)
-      case _          => None
-    }
-    val isValid = parsed \ "isValid" match {
-      case JBool(b) => b
-      case _        => true
-    }
-    val explanation = optStr("explanation")
-    val transcript = extractTranscript(explanation)
-    if (!isValid)
-      VoiceCommandResponse(transcript, isValid = false,
-        explanation.getOrElse(""), None, Nil, None, None, None, None)
-    else {
-      val stages = parsed \ "transformationStages" match {
-        case JArray(xs) => xs
-        case _          => Nil
-      }
-      VoiceCommandResponse(transcript, isValid = true,
-        explanation.getOrElse(""), optStr("sql"), stages,
-        optStr("chartType"), optStr("xAxis"), optStr("yAxis"),
-        optStr("zAxis"))
-    }
+    val reply = TransformResponse.parseJValue(parsed)
+    VoiceCommandResponse(extractTranscript(reply.explanation), reply)
   }
 
   // ------------------------------------------------------------ funnel
@@ -244,17 +181,19 @@ object VoicePromptBuilder {
    * (`onTransform(transcript)`, falling back to the explanation) — i.e.
    * the argument for [[Planner.plan]].
    */
-  def funnel(r: VoiceCommandResponse): Either[String, String] =
-    if (!r.isValid)
-      Left(if (r.explanation.nonEmpty) r.explanation else InvalidAudioFallback)
-    else if (r.sql.forall(_.isEmpty) || r.rawStages.isEmpty)
+  def funnel(r: VoiceCommandResponse): Either[String, String] = {
+    val reply = r.reply
+    if (!reply.isValid)
+      Left(if (reply.explanation.nonEmpty) reply.explanation else InvalidAudioFallback)
+    else if (reply.sql.forall(_.isEmpty) || reply.rawStages.isEmpty)
       Left(NoTransformMessage)
     else if (r.transcript.nonEmpty && r.transcript != DefaultTranscript)
       Right(r.transcript)
-    else if (r.explanation.nonEmpty)
-      Right(r.explanation)
+    else if (reply.explanation.nonEmpty)
+      Right(reply.explanation)
     else
       Left(NoTransformMessage)
+  }
 }
 
 /**
@@ -279,6 +218,8 @@ trait VoiceTranscriber {
 final class MockVoiceTranscriber(planner: Planner = new MockPlanner)
     extends VoiceTranscriber {
   import VoicePromptBuilder._
+  import TransformResponse.ParsedResponse
+  import graft.pipeline.StageRepair.RawStage
 
   /** Case-A explanation, verbatim from the prompt contract
     * (server/index.js:1017). */
@@ -294,20 +235,19 @@ final class MockVoiceTranscriber(planner: Planner = new MockPlanner)
       allSchemas: Seq[TableSchema]): VoiceCommandResponse = {
     val text = new String(audio, java.nio.charset.StandardCharsets.UTF_8).trim
     if (text.isEmpty)
-      VoiceCommandResponse("[No speech detected]", isValid = false,
-        EmptyAudioExplanation, None, Nil, None, None, None, None)
+      VoiceCommandResponse("[No speech detected]", rejected(EmptyAudioExplanation))
     else if (text.startsWith("MUSIC:"))
-      VoiceCommandResponse(text.stripPrefix("MUSIC:").trim, isValid = false,
-        unrelatedExplanation("music"), None, Nil, None, None, None, None)
+      VoiceCommandResponse(text.stripPrefix("MUSIC:").trim,
+        rejected(unrelatedExplanation("music")))
     else {
       val plan = planner.plan(text, allSchemas)
-      val stages: Seq[JValue] =
-        plan.stages.map(st => JObject(List(
-          "type" -> JString(st.stageType), "description" -> JString(st.description))))
-      VoiceCommandResponse(text, isValid = true,
-        s"User said: $text\n${plan.explanation}",
-        Some(plan.sql).filter(_.nonEmpty), stages,
-        plan.chartConfig.map(_.chartType), None, None, None)
+      VoiceCommandResponse(text, ParsedResponse(isValid = true,
+        Some(plan.sql).filter(_.nonEmpty), s"User said: $text\n${plan.explanation}",
+        plan.chartConfig,
+        plan.stages.map(st => RawStage(st.id, st.stageType, st.description, Map.empty))))
     }
   }
+
+  private def rejected(explanation: String): ParsedResponse =
+    ParsedResponse(isValid = false, None, explanation, None, Nil)
 }

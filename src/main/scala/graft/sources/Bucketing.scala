@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /**
  * Bucketed-table helpers: pre-shuffle a table ONCE at write time so every
@@ -32,6 +32,4 @@ object Bucketing {
       .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .saveAsTable(table)
-
-  def table(spark: SparkSession, name: String): DataFrame = spark.table(name)
 }

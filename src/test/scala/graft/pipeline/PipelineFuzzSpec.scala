@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.SparkTestBase
 import graft.model._
+import graft.planner.TransformResponse
 import org.apache.spark.sql.{DataFrame, Row}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -29,6 +30,11 @@ import org.scalacheck.rng.Seed
  * numeric literals (DuckDB's round-half-away coercion vs BIGINT,
  * which a Spark-SQL render cannot express — pinned in
  * StageCompilerPropertySpec's directed coercion test).
+ *
+ * The second half feeds seeded MALFORMED planner replies (untrusted model
+ * output) through parse → repair → execute: nothing may escape, and every
+ * stage is dropped by repair, executed, or ends as a [[StageResult]]
+ * error.
  */
 class PipelineFuzzSpec extends SparkTestBase {
 
@@ -270,6 +276,124 @@ class PipelineFuzzSpec extends SparkTestBase {
 
   private def rows(d: DataFrame): Seq[String] =
     d.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+
+  // --- malformed planner replies: parseable JSON with wrong field types,
+  // unknown stage types, non-object `data`, arrays where strings belong,
+  // and `data.table` naming the stage's own result or a later one
+  private val genJunk: Gen[String] =
+    Gen.oneOf("null", "7", "true", "\"\"", "\"x\"", "[]", "[1, \"a\", null]", "{}")
+
+  private val genColumn: Gen[String] = Gen.oneOf(
+    "\"oid\"", "\"amount\"", "\"status\"", "\"id\"", "\"nope\"",
+    "[\"oid\"]", "5", "null", "{\"c\": \"oid\"}")
+
+  /** `pos` is the stage's 1-based position: result tables are named
+    * `result_stage_<pos>_<type>`, so these name its own or a later one. */
+  private def genTableRef(pos: Int): Gen[String] = Gen.oneOf(
+    "\"ord_t\"", "\"cust_t\"", "\"missing_t\"", "[\"ord_t\"]", "3",
+    s"\"result_stage_${pos}_filter\"", s"\"result_stage_${pos}_custom\"",
+    s"\"result_stage_${pos + 1}_select\"")
+
+  private def genData(pos: Int): Gen[String] = {
+    val fields: Seq[(String, Gen[String])] = Seq(
+      "table" -> genTableRef(pos),
+      "leftTable" -> genTableRef(pos),
+      "rightTable" -> genTableRef(pos),
+      "leftKey" -> genColumn,
+      "rightKey" -> genColumn,
+      "joinType" -> Gen.oneOf("\"INNER\"", "\"CROSS\"", "\"left\"", "1", "[]"),
+      "column" -> genColumn,
+      "operator" -> Gen.oneOf("\">\"", "\"=\"", "\"LIKE\"", "\"IN\"", "\"~\"", "5",
+        "[\">\"]"),
+      "value" -> Gen.oneOf("\"100\"", "100", "1.5", "true", "null", "[1, 2]",
+        "{\"a\": 1}", "\"(1, 2\"", "\"'; DROP\""),
+      "conditions" -> Gen.oneOf("[]", "[1, 2]", "\"x\"",
+        "[{\"column\": \"amount\", \"operator\": \">\", \"value\": 3}]",
+        "[{\"column\": [\"oid\"], \"operator\": null, \"value\": {}}]",
+        "[{\"column\": null, \"logic\": 5}]"),
+      "groupBy" -> Gen.oneOf("[\"status\"]", "\"status\"", "[1, null]",
+        "[[\"status\"]]", "{}", "[\"nope\"]"),
+      "aggregations" -> Gen.oneOf(
+        "[{\"function\": \"SUM\", \"column\": \"amount\"}]",
+        "[{\"function\": \"EXPLODE\", \"column\": \"amount\"}]",
+        "[{\"function\": null, \"column\": [\"amount\"], \"alias\": 3}]",
+        "\"SUM(amount)\"", "[\"SUM\"]"),
+      "columns" -> Gen.oneOf("[\"oid\", \"amount\"]", "\"oid\"", "[1, [\"x\"]]",
+        "[\"nope\"]"),
+      "orderBy" -> Gen.oneOf(
+        "[{\"column\": \"amount\", \"direction\": \"DESC\"}]",
+        "[{\"column\": \"amount\", \"direction\": \"SIDEWAYS\"}]",
+        "[{\"column\": null, \"direction\": null}]",
+        "[\"amount\"]", "\"amount\"", "[{\"column\": {\"x\": 1}}]"),
+      "tables" -> Gen.oneOf("[\"cust_t\", \"cust2_t\"]", "\"cust_t\"",
+        "[\"cust_t\", 5]", s"[\"cust_t\", \"result_stage_${pos}_union\"]"),
+      "unionType" -> Gen.oneOf("\"UNION ALL\"", "\"INTERSECT\"", "0"),
+      "sql" -> Gen.oneOf("\"SELECT * FROM ord_t\"", "\"   \"", "5",
+        s"\"SELECT * FROM result_stage_${pos}_custom\"",
+        s"\"SELECT * FROM result_stage_${pos + 1}_custom\"",
+        "\"SELEKT nonsense\"", "[\"SELECT 1\"]"),
+      "tableName" -> Gen.oneOf("\"ord_t\"", "\"ghost\"", "[]"))
+    Gen.someOf(fields).flatMap(_.foldLeft(Gen.const(List.empty[String])) {
+      case (acc, (k, g)) => for (xs <- acc; v <- g) yield s"\"$k\": $v" :: xs
+    }).map(_.mkString("{", ", ", "}"))
+  }
+
+  private def genRawStage(pos: Int): Gen[String] = Gen.frequency(
+    1 -> genJunk, // a stage that is not an object
+    6 -> (for {
+      tpe <- Gen.oneOf("\"JOIN\"", "\"FILTER\"", "\"GROUP\"", "\"SELECT\"",
+        "\"SORT\"", "\"AGGREGATE\"", "\"UNION\"", "\"CUSTOM\"", "\"LOAD\"",
+        "\"filter\"", "\"PIVOT\"", "\"\"", "42", "[\"FILTER\"]", "null")
+      desc <- Gen.oneOf("\"high amount orders by customer\"", "\"d\"", "7",
+        "[\"d\"]", "null")
+      data <- Gen.frequency(4 -> genData(pos), 1 -> genJunk)
+    } yield s"""{"type": $tpe, "description": $desc, "data": $data}"""))
+
+  private val genReply: Gen[String] = for {
+    n <- Gen.chooseNum(1, 4)
+    stages <- (1 to n).foldLeft(Gen.const(Vector.empty[String])) {
+      (acc, pos) => for (xs <- acc; st <- genRawStage(pos)) yield xs :+ st
+    }
+    stagesJson <- Gen.frequency(
+      6 -> Gen.const(stages.mkString("[", ", ", "]")),
+      1 -> genJunk) // transformationStages that is not an array
+    isValid <- Gen.oneOf("true", "true", "\"yes\"", "1", "null")
+    sql <- Gen.oneOf("\"SELECT 1\"", "5", "[\"SELECT 1\"]", "{}")
+    chart <- Gen.oneOf("\"bar\"", "[\"bar\"]", "0")
+    explanation <- Gen.oneOf("\"e\"", "[]", "null")
+  } yield s"""{"isValid": $isValid, "sql": $sql, "chartType": $chart, """ +
+    s""""xAxis": 1, "yAxis": ["a"], "explanation": $explanation, """ +
+    s""""transformationStages": $stagesJson}"""
+
+  test("seeded malformed planner replies: every stage is dropped by repair, " +
+      "executed, or a StageResult error") {
+    registered
+    val schemaOf: StageRepair.SchemaLookup =
+      name => tables.get(name).map(_.columns.toSeq)
+    val topLevel = Seq("[]", "\"just text\"", "42", "null", "{}",
+      """{"transformationStages": "FILTER"}""",
+      """{"transformationStages": [[], null, 3, {"type": {}}]}""")
+    var (dropped, executed, failed) = (0, 0, 0)
+    (topLevel ++ cases(genReply, 150)).zipWithIndex.foreach { case (reply, i) =>
+      val parsed = TransformResponse.parse(reply)
+      val plan = TransformResponse.toPlan(parsed, schemaOf)
+      assert(plan.stages.size <= parsed.rawStages.size, s"reply $i: $reply")
+      val ex = new PipelineExecutor(spark)
+      tables.foreach { case (n, t) => ex.register(n, t) }
+      val results = ex.execute(plan.stages, ErrorPolicy.Continue)
+      assert(results.map(_.stage) == plan.stages, s"reply $i: $reply")
+      results.foreach { r =>
+        assert(r.df.isDefined != r.error.isDefined, s"reply $i: $reply")
+        r.df.foreach(_.limit(5).collect())
+      }
+      dropped += parsed.rawStages.size - plan.stages.size
+      executed += results.count(_.succeeded)
+      failed += results.count(!_.succeeded)
+    }
+    // the corpus reaches all three outcomes
+    assert(dropped > 0 && executed > 0 && failed > 0, (dropped, executed, failed))
+    info(s"stages dropped $dropped, executed $executed, StageResult errors $failed")
+  }
 
   test("200 random stage pipelines: executor equals the reference-render " +
       "SQL row-for-row") {

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.model._
 import graft.pipeline.StageRepair.RawStage
+import graft.planner.TransformResponse
 import org.scalatest.funsuite.AnyFunSuite
 
 class StageRepairSpec extends AnyFunSuite {
@@ -87,5 +88,23 @@ class StageRepairSpec extends AnyFunSuite {
       "leftTable" -> "a", "rightTable" -> "b", "leftKey" -> "k", "rightKey" -> "k")))
     assert(j.get.asInstanceOf[JoinStage].joinType == "INNER")
     assert(fix(RawStage("s", "UNION", "", Map("tables" -> Seq("only")))).isEmpty)
+  }
+
+  test("a repaired stage the ADT rejects is dropped, not thrown") {
+    // each reply parses; its stage survives repair but fails the ADT's
+    // own require (joinType, CUSTOM sql, FILTER conditions)
+    val rejected = Seq(
+      """{"type": "JOIN", "description": "j", "data": {"joinType": "CROSS",
+         "leftTable": "a", "rightTable": "b", "leftKey": "k", "rightKey": "k"}}""",
+      """{"type": "CUSTOM", "description": "c", "data": {"sql": "   "}}""",
+      """{"type": "FILTER", "description": "f", "data": {"conditions": [1, "x", []]}}""")
+    val kept = """{"type": "SELECT", "description": "s", "data": {"columns": ["a"]}}"""
+    rejected.foreach { stage =>
+      val r = TransformResponse.parse(
+        s"""{"explanation": "e", "transformationStages": [$stage, $kept]}""")
+      assert(fix(r.rawStages.head).isEmpty, stage)
+      val plan = TransformResponse.toPlan(r, noSchema)
+      assert(plan.stages == Seq(SelectStage("stage_2", "s", None, Seq("a"))), stage)
+    }
   }
 }

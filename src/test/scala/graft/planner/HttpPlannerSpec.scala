@@ -2,6 +2,8 @@ package graft.planner
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.model.{FilterStage, JoinStage}
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.net.InetSocketAddress
@@ -58,6 +60,12 @@ class HttpPlannerSpec extends AnyFunSuite {
     finally server.stop(0)
   }
 
+  private val generatePath = "/v1beta/models/gemini-3-flash-preview:generateContent"
+
+  /** Every surface forces a JSON reply: generationConfig.responseMimeType. */
+  private def responseMimeType(body: String): JValue =
+    JsonMethods.parse(body) \ "generationConfig" \ "responseMimeType"
+
   private def respond(ex: HttpExchange, status: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
     ex.getResponseHeaders.add("Content-Type", "application/json")
@@ -77,14 +85,13 @@ class HttpPlannerSpec extends AnyFunSuite {
     } { base =>
       val planner = new HttpPlanner(base, "test-key-123", lookup)
       val plan = planner.plan("orders over 100 with customer names", schemas)
-      assert(seenPath ==
-        s"/v1beta/models/${PromptBuilder.ModelId}:generateContent")
+      assert(seenPath == generatePath)
       assert(seenKey == "test-key-123")
       // body carries the built prompt and the forced response schema
       assert(seenBody.contains("orders over 100 with customer names"))
       assert(seenBody.contains("responseSchema"))
       assert(seenBody.contains("transformationStages"))
-      assert(seenBody.contains("application/json"))
+      assert(responseMimeType(seenBody) == JString("application/json"))
       // reply became typed stages through the same path the mock uses
       assert(plan.isValid && plan.stages.size == 2)
       assert(plan.stages.head.isInstanceOf[JoinStage])
@@ -106,8 +113,9 @@ class HttpPlannerSpec extends AnyFunSuite {
         |     "data": {"column": "amount", "operator": ">", "value": "100"}}
         |  ]
         |}""".stripMargin
-    @volatile var seenBody = ""
+    @volatile var seenPath = ""; @volatile var seenBody = ""
     withServer { ex =>
+      seenPath = ex.getRequestURI.getPath
       seenBody = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
       respond(ex, 200, geminiReply(voiceReply))
     } { base =>
@@ -118,9 +126,11 @@ class HttpPlannerSpec extends AnyFunSuite {
       assert(seenBody.contains(b64))
       assert(seenBody.contains("inline_data") && seenBody.contains("audio/webm"))
       assert(seenBody.indexOf("VOICE COMMAND") < seenBody.indexOf(b64))
+      assert(seenPath == generatePath)
+      assert(responseMimeType(seenBody) == JString("application/json"))
       // normalized through the same gating path as the mock
-      assert(r.isValid && r.transcript == "filter big orders please.")
-      assert(r.sql.exists(_.contains("amount > 100")))
+      assert(r.reply.isValid && r.transcript == "filter big orders please.")
+      assert(r.reply.sql.exists(_.contains("amount > 100")))
     }
   }
 
@@ -128,8 +138,9 @@ class HttpPlannerSpec extends AnyFunSuite {
     val reply =
       """{"transcript": "yes run it", "response": "Running the filter now.",
         | "shouldTransform": true}""".stripMargin
-    @volatile var seenBody = ""
+    @volatile var seenPath = ""; @volatile var seenBody = ""
     withServer { ex =>
+      seenPath = ex.getRequestURI.getPath
       seenBody = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
       respond(ex, 200, geminiReply(reply))
     } { base =>
@@ -141,6 +152,8 @@ class HttpPlannerSpec extends AnyFunSuite {
         schemas.head.columns, history)
       assert(seenBody.contains("filter orders over 100")) // history reaches the prompt
       assert(seenBody.contains("inline_data"))
+      assert(seenPath == generatePath)
+      assert(responseMimeType(seenBody) == JString("application/json"))
       assert(t == ChatAudioBuilder.ChatTurn("yes run it", "Running the filter now.",
         shouldTransform = true))
     }

@@ -28,8 +28,9 @@ class ImagePromptBuilderSpec extends AnyFunSuite {
   private val req = imageAnalysisRequest(Some(ctx))
 
   test("request carries the vision model id and JSON-forced output") {
-    assert(req.model == "gemini-3-flash-preview")
-    assert(req.responseMimeType == "application/json")
+    assert(PromptBuilder.ModelId == "gemini-3-flash-preview")
+    assert(req.responseSchema == imageAnalysisResponseSchema && req.audioMimeType.isEmpty)
+    // generateContent sets responseMimeType on every request (HttpPlannerSpec)
   }
 
   test("context block: priority-ordered table listing with [LATEST] marker and lowercase columns") {

@@ -14,8 +14,9 @@ class PromptBuilderSpec extends AnyFunSuite {
   private val req = PromptBuilder.transformRequest("join orders to customers", schemas)
 
   test("request carries the reference's model id and JSON-forced output") {
-    assert(req.model == "gemini-3-flash-preview")
-    assert(req.responseMimeType == "application/json")
+    assert(PromptBuilder.ModelId == "gemini-3-flash-preview")
+    assert(req.responseSchema == PromptBuilder.responseSchema && req.audioMimeType.isEmpty)
+    // generateContent sets responseMimeType on every request (HttpPlannerSpec)
   }
 
   test("prompt lists every table with its schema, one '- name: [...]' line each") {

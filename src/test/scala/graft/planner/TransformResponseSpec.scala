@@ -133,9 +133,10 @@ class TransformResponseSpec extends SparkTestBase {
     val r = TransformResponse.parse(
       """{"isValid": false,
          "explanation": "The request is unrelated to the data.",
-         "sql": "SELECT 1",
+         "sql": "SELECT 1", "chartType": "bar", "xAxis": "a", "yAxis": "b",
          "transformationStages": [{"type": "CUSTOM", "description": "x"}]}""")
     assert(!r.isValid && r.rawStages.isEmpty)
+    assert(r.sql.isEmpty && r.chartConfig.isEmpty)
     assert(r.explanation == "The request is unrelated to the data.")
   }
 

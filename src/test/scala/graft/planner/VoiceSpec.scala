@@ -1,6 +1,8 @@
 package graft.planner
 
 import graft.SparkTestBase
+import graft.pipeline.StageRepair.RawStage
+import graft.planner.TransformResponse.ParsedResponse
 import org.apache.spark.sql.Row
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -35,20 +37,19 @@ class VoiceSpec extends SparkTestBase {
   }
 
   test("schemasInfo prefers allSchemas and falls back to the single schema") {
-    val multi = schemasInfo(Seq("x" -> "BIGINT"), schemas)
+    val multi = PromptBuilder.schemasInfo(schemas, Seq("x" -> "BIGINT"))
     assert(multi.startsWith("Available Tables:"))
     assert(multi.contains("- orders: ") && multi.contains("- customers: "))
-    val single = schemasInfo(Seq("x" -> "BIGINT"), Nil)
+    val single = PromptBuilder.schemasInfo(Nil, Seq("x" -> "BIGINT"))
     assert(single.startsWith("Current Table Schema (DuckDB):"))
     assert(single.contains(""""column_name":"x""""))
   }
 
   test("request reuses the transform surface's response schema and model id") {
     val req = buildRequest(Nil, schemas)
-    assert(req.model == PromptBuilder.ModelId)
-    assert(req.responseMimeType == "application/json")
+    // model id and responseMimeType are set on the wire (HttpPlannerSpec)
     assert(req.responseSchema == PromptBuilder.responseSchema)
-    assert(req.audioMimeType == "audio/webm")
+    assert(req.audioMimeType.contains("audio/webm"))
   }
 
   // --------------------------------------------------------- normalize
@@ -58,7 +59,7 @@ class VoiceSpec extends SparkTestBase {
   test("isValid defaults to true when absent (backward compatibility)") {
     val r = normalize(parse("""{"explanation":"User said: filter rows\nok",
       "sql":"SELECT 1","transformationStages":[{"type":"FILTER","description":"f"}]}"""))
-    assert(r.isValid && r.transcript == "filter rows")
+    assert(r.reply.isValid && r.transcript == "filter rows")
   }
 
   test("invalid responses are stripped of every transformation field") {
@@ -66,40 +67,42 @@ class VoiceSpec extends SparkTestBase {
       "explanation":"The audio appears to be [music], not a data transformation command.",
       "sql":"SELECT 1","chartType":"bar","xAxis":"a","yAxis":"b",
       "transformationStages":[{"type":"CUSTOM","description":"x"}]}"""))
-    assert(!r.isValid)
-    assert(r.sql.isEmpty && r.rawStages.isEmpty && r.chartType.isEmpty)
-    assert(r.xAxis.isEmpty && r.yAxis.isEmpty && r.zAxis.isEmpty)
+    assert(!r.reply.isValid)
+    // chartConfig carries chartType and the x/y/z axes
+    assert(r.reply.sql.isEmpty && r.reply.rawStages.isEmpty && r.reply.chartConfig.isEmpty)
   }
 
   test("transcript extraction: User said line, marker, first-sentence fallback") {
-    assert(extractTranscript(Some("User said: show top customers\nThen I did X"))
+    assert(extractTranscript("User said: show top customers\nThen I did X")
       == "show top customers")
-    assert(extractTranscript(Some("user SAID:   mixed case works"))
+    assert(extractTranscript("user SAID:   mixed case works")
       == "mixed case works")
-    assert(extractTranscript(Some("[No speech detected] nothing heard"))
+    assert(extractTranscript("[No speech detected] nothing heard")
       == "[No speech detected]")
-    assert(extractTranscript(Some("Filtered the orders table. More detail follows."))
+    assert(extractTranscript("Filtered the orders table. More detail follows.")
       == "Filtered the orders table")
-    assert(extractTranscript(None) == DefaultTranscript)
-    assert(extractTranscript(Some("")) == DefaultTranscript)
+    assert(extractTranscript("") == DefaultTranscript)
+    // an absent explanation decodes to "" and gets the placeholder too
+    assert(normalize(parse("""{"isValid": true}""")).transcript == DefaultTranscript)
   }
 
   // ------------------------------------------------------------ funnel
 
   private def valid(transcript: String, sql: Option[String],
-      stages: Seq[JValue], explanation: String = "e") =
-    VoiceCommandResponse(transcript, isValid = true, explanation, sql,
-      stages, None, None, None, None)
+      stages: Seq[RawStage], explanation: String = "e") =
+    VoiceCommandResponse(transcript,
+      ParsedResponse(isValid = true, sql, explanation, None, stages))
 
-  private val oneStage: Seq[JValue] =
-    Seq(JObject(List("type" -> JString("CUSTOM"), "description" -> JString("d"))))
+  private val oneStage: Seq[RawStage] =
+    Seq(RawStage("stage_1", "CUSTOM", "d", Map.empty))
 
   test("funnel rejects invalid audio with the explanation (or fallback)") {
-    val r = VoiceCommandResponse("[No speech detected]", isValid = false,
+    val r = VoiceCommandResponse("[No speech detected]", ParsedResponse(isValid = false,
+      None,
       "No speech was detected in the audio. Please speak clearly about how you want to transform your data.",
-      None, Nil, None, None, None, None)
-    assert(VoicePromptBuilder.funnel(r) == Left(r.explanation))
-    assert(VoicePromptBuilder.funnel(r.copy(explanation = ""))
+      None, Nil))
+    assert(VoicePromptBuilder.funnel(r) == Left(r.reply.explanation))
+    assert(VoicePromptBuilder.funnel(r.copy(reply = r.reply.copy(explanation = "")))
       == Left(InvalidAudioFallback))
   }
 
@@ -122,7 +125,7 @@ class VoiceSpec extends SparkTestBase {
 
   test("mock: empty audio takes branch A (no transform fields)") {
     val r = new MockVoiceTranscriber().command(Array.emptyByteArray, Nil, schemas)
-    assert(!r.isValid && r.sql.isEmpty && r.rawStages.isEmpty)
+    assert(!r.reply.isValid && r.reply.sql.isEmpty && r.reply.rawStages.isEmpty)
     assert(r.transcript == "[No speech detected]")
     assert(VoicePromptBuilder.funnel(r).isLeft)
   }
@@ -130,14 +133,14 @@ class VoiceSpec extends SparkTestBase {
   test("mock: music audio takes branch B") {
     val r = new MockVoiceTranscriber()
       .command("MUSIC: some song".getBytes(utf8), Nil, schemas)
-    assert(!r.isValid && r.explanation.contains("appears to be [music]"))
+    assert(!r.reply.isValid && r.reply.explanation.contains("appears to be [music]"))
     assert(VoicePromptBuilder.funnel(r).isLeft)
   }
 
   test("mock: a valid command funnels into the text planner and executes") {
     val r = new MockVoiceTranscriber()
       .command("join the two tables".getBytes(utf8), Nil, schemas)
-    assert(r.isValid && r.explanation.startsWith("User said: join the two tables"))
+    assert(r.reply.isValid && r.reply.explanation.startsWith("User said: join the two tables"))
     val prompt = VoicePromptBuilder.funnel(r)
       .getOrElse(fail("expected Right"))
     // the reference re-drives the TEXT path with the transcript

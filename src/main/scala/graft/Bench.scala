@@ -40,12 +40,11 @@ object Bench {
       val t0 = System.nanoTime()
       val ok =
         try {
-          val df = SparkEntry.queries(name)(spark, sfDir)
-          df.write.format("noop").mode("overwrite").save()
-          // checkpoint-lifetime contract (Checkpoints scaladoc): free
-          // the result's caller-owned checkpoint blocks so a heavy
-          // iterative query doesn't tax every query after it
-          graft.plans.Checkpoints.release(df)
+          // runGate frees the result's caller-owned checkpoint blocks
+          // (Checkpoints scaladoc) so a heavy iterative query doesn't tax
+          // every query after it, and deletes its export dirs
+          SparkEntry.runGate(spark, name, sfDir)(
+            _.write.format("noop").mode("overwrite").save())
           true
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")

@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graftshim.CatalystBridge
 
 /**
- * Session bootstrap: registers graft's native Catalyst expressions via the
- * public `SparkSessionExtensions` API and applies the scale-oriented
+ * Session bootstrap: registers graft's native Catalyst expressions and the
+ * [[graft.pipeline.SortLocalRelation]] optimizer rule via the public
+ * `SparkSessionExtensions` API and applies the scale-oriented
  * defaults (AQE, skew handling, sized shuffle partitions).
  *
  * Usable two ways:
@@ -30,6 +31,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // Sorts over a small driver-held result run on the driver (no job).
+    ext.injectOptimizerRule(_ => graft.pipeline.SortLocalRelation)
+
     def inject(name: String, builder: Seq[Expression] => Expression,
                clazz: Class[_]): Unit =
       ext.injectFunction((

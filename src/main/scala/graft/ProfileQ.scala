@@ -102,6 +102,7 @@ object ProfileQ {
         writePlan(name, SparkEntry.queries(name)(spark, sfDir))
         System.err.println(s"[planonly] $name dumped")
       }
+      SparkEntry.removeExports(spark)
       spark.stop()
       return
     }
@@ -159,6 +160,7 @@ object ProfileQ {
       // formatted plan dump for the committed evidence
       writePlan(name, SparkEntry.queries(name)(spark, sfDir))
     }
+    SparkEntry.removeExports(spark)
     spark.stop()
   }
 }

@@ -232,13 +232,29 @@ object SparkEntry {
         .otherwise(lit("assistant")).as("role"),
       col("text").as("content"))
 
-  /** Per-JVM-scoped tmp dir for export round-trip gates: two concurrent
+  /** Per-application tmp dir for export round-trip gates: two concurrent
     * driver/test runs on one machine must not clobber each other's
-    * export mid-read (same name per JVM keeps repeated bench runs from
-    * accumulating garbage dirs). */
+    * export mid-read. [[runGate]] deletes it once the gate is read back. */
   private def exportDir(spark: SparkSession, name: String): String =
     new java.io.File(sys.props("java.io.tmpdir"),
       s"${name}_${spark.sparkContext.applicationId}").getPath
+
+  /** Deletes every `exportDir` the gates wrote for this application. */
+  def removeExports(spark: SparkSession): Unit = {
+    val suffix = "_" + spark.sparkContext.applicationId
+    Option(new java.io.File(sys.props("java.io.tmpdir")).listFiles()).toSeq.flatten
+      .filter(f => f.getName.startsWith("graft_") && f.getName.endsWith(suffix))
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
+
+  /** Builds gate `name`, hands its result to `readBack`, then frees what the
+    * gate left behind, also when building or reading back fails: the
+    * result's caller-owned checkpoint blocks and its export directories. */
+  def runGate[T](spark: SparkSession, name: String, sfDir: String)(readBack: DataFrame => T): T =
+    try {
+      val df = queries(name)(spark, sfDir)
+      try readBack(df) finally graft.plans.Checkpoints.release(df)
+    } finally removeExports(spark)
 
   // -------------------------------------------------------------- flagship
 

@@ -16,14 +16,11 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => subset.isEmpty || subset(name) }
-      .foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        // free caller-owned checkpoint blocks between queries — 381
-        // results in one JVM otherwise accumulate dead storage
-        graft.plans.Checkpoints.release(df)
-      }
+      .foreach { case (name, _) =>
+      // runGate frees checkpoint blocks and export dirs between queries —
+      // 381 results in one JVM otherwise accumulate dead storage
+      try SparkEntry.runGate(spark, name, sfDir)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

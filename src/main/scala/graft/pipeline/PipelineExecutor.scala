@@ -3,6 +3,9 @@ package graft.pipeline
 import graft.compile.StageCompiler
 import graft.model._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
+import org.apache.spark.sql.graftshim.StageTables
 import org.apache.spark.sql.types._
 
 import scala.collection.mutable
@@ -42,10 +45,14 @@ object ErrorPolicy extends Enumeration {
  *  - every result is registered as a temp view so CUSTOM SQL stages can
  *    reference it.
  *
- * Deliberate difference (SURVEY §4): results stay LAZY temp views, not
+ * Deliberate difference (SURVEY §4): results start as LAZY temp views, not
  * eagerly materialized tables — Catalyst fuses the whole chain and pushes
- * filters/pruning into the scan, at the cost of re-running the upstream
- * chain on every preview or collect of a later stage.
+ * filters/pruning into the scan. A stage result whose [[preview]] is
+ * complete (fewer rows than asked for, and fewer than [[PipelineExecutor.PreviewRows]])
+ * then becomes a driver-held local relation of those rows, and the stages
+ * registered after it read that relation instead of re-running the chain.
+ * Uploads, plans with nondeterministic or current-time expressions, and a
+ * result that [[register]] overwrites stay (or become again) lazy.
  */
 final class PipelineExecutor(val spark: SparkSession) {
 
@@ -57,7 +64,7 @@ final class PipelineExecutor(val spark: SparkSession) {
   /** Register an input table (LOAD-equivalent) as a named temp view. */
   def register(name: String, df: DataFrame): this.type = {
     tables(name) = df
-    df.createOrReplaceTempView(name)
+    StageTables.replaceTempView(df, name)
     this
   }
 
@@ -145,8 +152,45 @@ final class PipelineExecutor(val spark: SparkSession) {
   def resultTableName(index: Int, stage: Stage): String =
     s"result_stage_${index}_${stage.stageType.toLowerCase}"
 
-  /** 1000-row preview after every op (ui/src/App.tsx:455,608,1461,1699). */
-  def preview(name: String, n: Int = 1000): Array[Row] = table(name).limit(n).collect()
+  /** Preview after every op (ui/src/App.tsx:455,608,1461,1699). When the
+    * rows are the whole result of a stage, they are kept (see [[keepLocal]]). */
+  def preview(name: String, n: Int = PipelineExecutor.PreviewRows): Array[Row] = {
+    val df = table(name)
+    val rows = df.limit(n).collect()
+    if (rows.length < math.min(n, PipelineExecutor.PreviewRows) &&
+        stageToTable.valuesIterator.contains(name))
+      keepLocal(name, df.queryExecution.analyzed, rows)
+    rows
+  }
+
+  /** Re-register stage result `name` as a local relation of its complete
+    * result `rows`, and put that relation in place of `fragment` (its lazy
+    * plan) in every table registered from it, the way Spark's
+    * `CacheManager.useCachedData` substitutes cached data. Plans are matched
+    * by reference, in registration order: a rewritten table's new plan
+    * replaces its old one in the tables after it, so a later complete
+    * preview still finds its fragment downstream. A plan that may give
+    * other rows when re-run stays lazy. */
+  private def keepLocal(name: String, fragment: LogicalPlan, rows: Array[Row]): Unit = {
+    val repeatable = fragment.collectWithSubqueries {
+      case p => p.deterministic && !p.containsPattern(CURRENT_LIKE)
+    }.forall(identity)
+    if (repeatable && !fragment.isInstanceOf[LocalRelation] && !fragment.isStreaming) {
+      val replaced = new java.util.IdentityHashMap[LogicalPlan, LogicalPlan]()
+      replaced.put(fragment, StageTables.localRelation(fragment, rows.toSeq))
+      register(name, StageTables.ofPlan(spark, replaced.get(fragment)))
+      tables.toSeq.foreach { case (other, df) =>
+        val plan = df.queryExecution.analyzed
+        val rewritten = plan.transformDownWithSubqueries {
+          case p if replaced.containsKey(p) => replaced.get(p)
+        }
+        if (rewritten ne plan) {
+          register(other, StageTables.ofPlan(spark, rewritten))
+          replaced.put(plan, table(other).queryExecution.analyzed)
+        }
+      }
+    }
+  }
 
   /** Schema in the reference's DESCRIBE-shaped `{column_name, column_type}`
     * rows (ui/src/App.tsx:610-611, consumed at ui/src/App.tsx:1845-1848). */
@@ -177,6 +221,12 @@ final class PipelineExecutor(val spark: SparkSession) {
 }
 
 object PipelineExecutor {
+  /** The reference's preview cap (ui/src/App.tsx:455,608): the default
+    * size of [[PipelineExecutor.preview]], the bound below which a preview
+    * counts as a complete result kept on the driver, and the largest
+    * relation [[SortLocalRelation]] sorts on the driver. */
+  val PreviewRows = 1000
+
   /** Table name for an uploaded file: `table_<stem, [^a-zA-Z0-9]→_>`
     * (ui/src/App.tsx:470-472,151-152). */
   def tableNameForFile(fileName: String): String = {

@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.pipeline.PipelineExecutor
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.graftshim.DriverCsvSchema
+import org.apache.spark.sql.graftshim.{DriverCsvSchema, StageTables}
 import org.apache.spark.sql.types._
 
 /**
@@ -62,7 +62,7 @@ object Ingest {
     val fileName = new java.io.File(path).getName
     val name = PipelineExecutor.tableNameForFile(fileName)
     val df = csv(spark, path)
-    df.createOrReplaceTempView(name)
+    StageTables.replaceTempView(df, name)
     (name, df)
   }
 
@@ -99,7 +99,7 @@ object Ingest {
     val fileName = new java.io.File(path).getName
     val name = PipelineExecutor.tableNameForFile(fileName)
     val df = jsonl(spark, path)
-    df.createOrReplaceTempView(name)
+    StageTables.replaceTempView(df, name)
     (name, df)
   }
 
@@ -140,7 +140,7 @@ object Ingest {
           raw.withColumn("ts", org.apache.spark.sql.functions.expr(
             "timestamp_micros(ts DIV 1000)"))
         else raw
-        df.createOrReplaceTempView(n)
+        StageTables.replaceTempView(df, n)
         Some(n -> df)
       } else None
     }.toMap

@@ -18,15 +18,14 @@ class PlanAuditSpec extends SparkTestBase {
   private val dir = "/root/testdata/sf0.001"
 
   test("no gate plan contains a CartesianProduct") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try {
-          val plan = fn(spark, dir).queryExecution.executedPlan.toString
-          if (plan.contains("CartesianProduct")) Some(name) else None
-        } catch {
-          case e: Throwable =>
-            Some(s"$name (planning failed: ${String.valueOf(e.getMessage).take(120)})")
-        }
+    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+      try {
+        val plan = SparkEntry.runGate(spark, name, dir)(_.queryExecution.executedPlan.toString)
+        if (plan.contains("CartesianProduct")) Some(name) else None
+      } catch {
+        case e: Throwable =>
+          Some(s"$name (planning failed: ${String.valueOf(e.getMessage).take(120)})")
+      }
     }
     assert(offenders.isEmpty, s"offending gates: ${offenders.mkString(", ")}")
   }

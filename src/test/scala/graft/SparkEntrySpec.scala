@@ -38,15 +38,36 @@ class SparkEntrySpec extends SparkTestBase {
     }
   }
 
-  for ((name, fn) <- SparkEntry.queries) {
+  /** This application's export directories under `java.io.tmpdir`. */
+  private def exportDirs(): Seq[String] =
+    Option(new java.io.File(sys.props("java.io.tmpdir")).list()).toSeq.flatten
+      .filter(n => n.startsWith("graft_") && n.endsWith("_" + spark.sparkContext.applicationId))
+
+  test("export gates delete their directories once read back, also when the read-back fails") {
+    val gates = Seq("q_export_jsonl", "q_export_wap", "q_export_orc",
+      "q_export_partitioned", "q_load_parquet_merge", "q_dedup_index")
+    SparkEntry.removeExports(spark)
+    gates.foreach { g =>
+      assert(SparkEntry.runGate(spark, g, sf)(_.count()) > 0, g)
+      assert(exportDirs().isEmpty, g)
+    }
+    val e = intercept[IllegalStateException](SparkEntry.runGate(spark, "q_export_orc", sf) { df =>
+      assert(exportDirs().nonEmpty)
+      throw new IllegalStateException("read-back failed")
+    })
+    assert(e.getMessage == "read-back failed")
+    assert(exportDirs().isEmpty)
+  }
+
+  for (name <- SparkEntry.queries.keys) {
     test(s"query $name runs and returns rows at sf0.001") {
-      val out = fn(spark, sf)
-      assert(out.count() > 0, s"$name returned 0 rows")
+      val (rows, schema) = SparkEntry.runGate(spark, name, sf)(df => (df.count(), df.schema))
+      assert(rows > 0, s"$name returned 0 rows")
       // Float-determinism convention: DECIMAL is an accumulator type,
       // never an output type — decimal stringification ('123.4' vs
       // '123.40') is not canonical across engines, so any DecimalType
       // column is a latent oracle hash mismatch.
-      val decimalCols = out.schema.fields.collect {
+      val decimalCols = schema.fields.collect {
         case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType] => f.name
       }
       assert(decimalCols.isEmpty,

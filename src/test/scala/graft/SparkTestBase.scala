@@ -15,6 +15,27 @@ abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.spark
   import scala.jdk.CollectionConverters._
 
+  private val temps = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A fresh directory under `java.io.tmpdir`, deleted with its contents
+    * after the suite. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    temps.add(d)
+    d
+  }
+
+  /** A fresh file under `java.io.tmpdir`, deleted after the suite. */
+  def tempFile(prefix: String, suffix: String): java.nio.file.Path = {
+    val f = java.nio.file.Files.createTempFile(prefix, suffix)
+    temps.add(f)
+    f
+  }
+
+  override def afterAll(): Unit =
+    try temps.forEach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
+    finally super.afterAll()
+
   def df(schemaDdl: String, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(rows.asJava,
       org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))

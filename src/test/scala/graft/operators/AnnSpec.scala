@@ -152,7 +152,7 @@ class AnnSpec extends SparkTestBase {
     val half1 = e.filter(col("vec_id") % 2 === 0)
     val half2 = e.filter(col("vec_id") % 2 === 1)
     val idx = Ann.ivfIndex(half1, "vec_id", "v", nCentroids = 4)
-    val path = System.getProperty("java.io.tmpdir") + "/graft_ivf_append_spec"
+    val path = tempDir("graft_ivf_append_spec").resolve("index").toString
     Ann.saveIvfIndex(idx, path)
     Ann.appendToIvfIndex(spark, path, half2, "v")
     val loaded = Ann.loadIvfIndex(spark, path)
@@ -276,7 +276,7 @@ class AnnSpec extends SparkTestBase {
   test("IVF index persists and reloads: identical search results, cell-partitioned layout") {
     val e = realEmbeddings
     val index = Ann.ivfIndex(e, "vec_id", "v", nCentroids = 8)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_index").toString
+    val dir = tempDir("ivf_index").toString
     Ann.saveIvfIndex(index, dir)
     val loaded = Ann.loadIvfIndex(spark, dir)
     // centroid matrix round-trips exactly (text doubles are lossless via toString)

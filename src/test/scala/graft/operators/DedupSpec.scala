@@ -85,7 +85,7 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("persisted minhash index: probes rediscover history near-dups without bodies") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mh_idx").toString
+    val dir = tempDir("graft_mh_idx").toString
     Dedup.saveMinhashIndex(corpus, "id", "text", dir,
       shingleN = 3, numHashes = 64, bands = 16)
     // probe 101 = exact copy of doc 1; probe 102 = unrelated

@@ -246,7 +246,7 @@ class PqSpec extends SparkTestBase {
       .limit(40)
     val cb = Pq.fit(e, "vec_id", "v", 2, 4, 1)
     val codes = Pq.encode(e, "vec_id", "v", cb)
-    val path = System.getProperty("java.io.tmpdir") + "/graft_pq_spec"
+    val path = tempDir("graft_pq_spec").resolve("index").toString
     Pq.savePqIndex(codes, cb, path)
     val (cb2, codes2) = Pq.loadPqIndex(spark, path)
     // Double.toString is shortest-round-trip: parsing returns the

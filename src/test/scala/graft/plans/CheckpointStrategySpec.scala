@@ -32,8 +32,7 @@ class CheckpointStrategySpec extends SparkTestBase {
     * the conf is left at `false`, which overrides the now-set session
     * checkpoint dir for every later suite in this shared JVM. */
   private def withReliable[A](body: => A): A = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ckpt-spec").toString
+    val dir = tempDir("graft-ckpt-spec").toString
     spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set(Checkpoints.ReliableConf, "true")
     try body finally spark.conf.set(Checkpoints.ReliableConf, "false")

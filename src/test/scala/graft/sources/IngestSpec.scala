@@ -12,7 +12,7 @@ import scala.util.Try
 class IngestSpec extends SparkTestBase {
 
   private def writeCsv(content: String): String = {
-    val f = Files.createTempFile("graft_ingest", ".csv")
+    val f = tempFile("graft_ingest", ".csv")
     Files.writeString(f, content)
     f.toString
   }
@@ -42,7 +42,7 @@ class IngestSpec extends SparkTestBase {
 
   test("parquetMerged: schema union across shards, NULLs for missing columns") {
     import org.apache.spark.sql.Row
-    val base = Files.createTempDirectory("graft_merge_spec").toString
+    val base = tempDir("graft_merge_spec").toString
     df("id BIGINT, a STRING", Seq(Row(1L, "x"), Row(2L, "y")))
       .write.parquet(s"$base/early")
     df("id BIGINT, a STRING, b BIGINT", Seq(Row(3L, "z", 30L)))
@@ -71,7 +71,7 @@ class IngestSpec extends SparkTestBase {
 
   test("loadCsvTable registers under the reference's table_<stem> name") {
     val p = writeCsv("a\n1\n")
-    val dir = Files.createTempDirectory("graft")
+    val dir = tempDir("graft")
     val renamed = dir.resolve("My Data-File.csv")
     Files.move(java.nio.file.Path.of(p), renamed)
     val (name, _) = Ingest.loadCsvTable(spark, renamed.toString)

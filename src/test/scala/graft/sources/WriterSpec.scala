@@ -11,10 +11,7 @@ class WriterSpec extends SparkTestBase {
     Files.list(Paths.get(dir)).iterator().asScala
       .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq
 
-  private def tmp(name: String): String = {
-    val d = Files.createTempDirectory(name).toString
-    Files.delete(Paths.get(d)); d
-  }
+  private def tmp(name: String): String = tempDir(name).resolve("out").toString
 
   test("writePartitioned: one file per partition, pruned reads, file-size caps") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

@@ -11,9 +11,7 @@ class WriterWapSpec extends SparkTestBase {
   private lazy val good = df("id BIGINT, v DOUBLE", Seq(
     Row(1L, 1.0), Row(2L, 2.0), Row(3L, 3.0)))
 
-  private def tmp(name: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"wap_spec_${name}_${System.nanoTime()}").getPath
+  private def tmp(name: String): String = tempDir(s"wap_spec_$name").resolve("out").toString
 
   test("passing audit publishes data plus an _AUDIT.json manifest") {
     val out = tmp("ok")

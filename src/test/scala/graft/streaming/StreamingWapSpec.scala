@@ -19,8 +19,8 @@ class StreamingWapSpec extends SparkTestBase {
   test("good batches publish atomically; a failing audit blocks publication") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_swap").toString
-    val ckpt = Files.createTempDirectory("graft_swap_ck").toString
+    val base = tempDir("graft_swap").toString
+    val ckpt = tempDir("graft_swap_ck").toString
     val mem = MemoryStream[Doc]
     val rules = Seq(Expect.notNull("text"))
     val q = mem.toDF().writeStream
